@@ -9,7 +9,8 @@ r12: a different-core-count run no longer clobbers the map, VERDICT r11
 #2) AND the legacy ``bench_queries.json``, prints the per-query map
 again in bounded chunks, and prints a compact summary as the FINAL
 stdout line (the driver's tail-capture window is bounded; round 1's
-full-object final line overflowed it)::
+full-object final line overflowed it). The session and the JVM are shut
+down before any of this is printed, so no shutdown trace can follow it::
 
     {"metric": "total_query_wall_clock", "value": <total sec>,
      "unit": "sec", "sf": 0.1, "n_queries": N, "cpus": C,
@@ -34,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -63,6 +65,29 @@ def _execute(df) -> None:
     wins for typical plans; arrow only wins on very wide multi-branch
     trees, which the report rewrite removed anyway.)"""
     df.write.format("noop").mode("overwrite").save()
+
+
+def _shutdown(spark) -> None:
+    """Stop streams and the session, then the JVM itself, so nothing the
+    JVM prints on its way down (a StateStore maintenance thread's
+    ``RpcEnvStoppedException`` trace) can land after the closing line."""
+    from pyspark import SparkContext
+
+    for q in spark.streams.active:
+        q.stop()
+    spark.stop()
+    gw = SparkContext._gateway
+    if gw is not None:
+        proc = gw.proc
+        gw.shutdown()
+        proc.stdin.close()
+        try:
+            proc.wait(timeout=30)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait(timeout=30)
+        SparkContext._gateway = None
+        SparkContext._jvm = None
 
 
 def main() -> None:
@@ -253,6 +278,7 @@ def main() -> None:
         json.dump(full, fh, indent=1)
     with open(os.path.join(_HERE, "bench_queries.json"), "w") as fh:
         json.dump(full, fh, indent=1)
+    _shutdown(spark)
     print(json.dumps(full))
     # The per-query map, chunked across bounded stdout lines right above
     # the final compact line (same VERDICT ask): the driver's tail
@@ -290,7 +316,6 @@ def main() -> None:
             }
         )
     )
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -45,17 +45,48 @@ def table_path(sf_dir: str, name: str) -> str:
 # Unity/Glue) — this dict is that catalog. DataFrames are immutable
 # plans, so sharing the object across queries is safe; the testdata
 # under one (session, dir) never changes within a process (the driver
-# regenerates it between rounds = between processes). Keyed on the
-# SparkContext's applicationId + startTime — unique per live context,
-# unlike id(), whose CPython address can be recycled after a stopped
-# context is garbage-collected and would then serve relations bound to
-# the dead session (r6 review finding).
+# regenerates it between rounds = between processes).
 _RELATIONS: dict[tuple, DataFrame] = {}
 
 
 def _context_key(spark: SparkSession) -> tuple:
     sc = spark.sparkContext
     return (sc.applicationId, sc.startTime)
+
+
+def session_memo(store: dict, spark: SparkSession, key: tuple, build):
+    """``store[(context, *key)]``, calling ``build()`` only on a miss.
+
+    The one lifetime rule for everything the package reuses within a
+    session (relations, shared intermediates, trained weights, samples,
+    child sessions):
+
+    - The context is the SparkContext's applicationId + startTime, not
+      ``id()``: a recycled CPython address after a stopped context is
+      garbage-collected would serve values bound to the dead session.
+    - A miss first drops the entries of other (stopped) contexts, so
+      pytest fixtures that rebuild sessions don't pin dead plan objects
+      for the life of the process.
+    - A DataFrame is bound to the SparkSession that created it, not just
+      the context: ``spark.newSession()`` shares the context but owns its
+      conf and temp-view catalog, so a frame made by another session
+      would run under that session's conf. It is rebuilt for the caller,
+      and released first if it was persisted (``unpersist`` matches
+      cached plans by result, so a never-persisted frame is left alone
+      rather than uncaching someone else's identical plan). Any other
+      value is returned as it is.
+    """
+    live = _context_key(spark)
+    hit = store.get((live, *key))
+    if hit is not None:
+        if not isinstance(hit, DataFrame) or hit.sparkSession is spark:
+            return hit
+        if hit.is_cached:
+            hit.unpersist()
+    for k in [k for k in store if k[0] != live]:
+        del store[k]
+    value = store[(live, *key)] = build()
+    return value
 
 
 def local_table(spark: SparkSession, rows, schema) -> DataFrame:
@@ -104,32 +135,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # Runtime-settable SQL conf — set here (not only in the session
         # factory) because the grading driver builds its own session;
-        # OUTSIDE the cache check because a second SparkSession sharing
-        # the context (spark.newSession) has its own conf (r6 review).
+        # outside the memo because a second SparkSession sharing the
+        # context (spark.newSession) has its own conf.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (_context_key(spark), os.path.abspath(sf_dir), name)
-    cached = _RELATIONS.get(key)
-    # A DataFrame is bound to the SparkSession that created it, not just
-    # the context: under spark.newSession() on a shared context the
-    # cached frame would execute under the ORIGINAL session's conf and
-    # register temp views in its catalog (r6 advisor). Hit only when the
-    # owning session is the caller's.
-    if cached is not None and cached.sparkSession is spark:
-        return cached
-    if cached is None:
-        # Opportunistic eviction: entries keyed to stopped contexts
-        # (pytest fixtures rebuilding sessions) otherwise accumulate for
-        # the life of the process, pinning dead plan objects.
-        live = _context_key(spark)
-        for k in [k for k in _RELATIONS if k[0] != live]:
-            del _RELATIONS[k]
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        from pyspark.sql import functions as F
 
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    _RELATIONS[key] = df
-    return df
+    def build() -> DataFrame:
+        df = spark.read.parquet(table_path(sf_dir, name))
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            from pyspark.sql import functions as F
+
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        return df
+
+    return session_memo(
+        _RELATIONS, spark, (os.path.abspath(sf_dir), name), build
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -24,11 +24,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spendinganalysisetl_spark.catalog import local_table as _local_table
+from spendinganalysisetl_spark.catalog import session_memo
 from spendinganalysisetl_spark.functions.vectors import cosine, dot
 from spendinganalysisetl_spark.partitioning import spread as _spread
 
 
-# Deterministic training samples, keyed per (session, input frame) —
+# Deterministic training samples, keyed per (context, input frame) —
 # see corpus_sample. Strong refs to the keyed frames stop id() reuse;
 # a small FIFO cap bounds driver memory when tests churn ad-hoc frames.
 _SAMPLE_CACHE: dict[tuple, tuple[DataFrame, list]] = {}
@@ -52,41 +53,30 @@ def corpus_sample(
     the cached entry holds a strong reference to that frame so the
     id()-based key can never be recycled while the entry lives.
 
-    Staleness contract (same as shared()/_RELATIONS): the sample is
-    pinned for the session lifetime — if the underlying parquet files
-    are REWRITTEN mid-session (e.g. a regenerated sf1 sidecar corpus),
-    every index trained from it silently goes stale. Regenerating
-    testdata requires either a fresh session (bench scripts already
-    start one per run) or an explicit ``clear_sample_cache()`` call —
-    the invalidation hook make_sf1.py runs after rewriting the
-    sidecar (ADVICE r8 #3)."""
-    from spendinganalysisetl_spark.catalog import _context_key
+    Staleness contract (same as every catalog.session_memo store): the
+    sample is pinned for the session lifetime — if the underlying
+    parquet files are REWRITTEN mid-session (e.g. a regenerated sf1
+    sidecar corpus), every index trained from it silently goes stale.
+    Regenerating testdata requires either a fresh session (bench scripts
+    already start one per run) or an explicit ``clear_sample_cache()``
+    call — the invalidation hook make_sf1.py runs after rewriting the
+    sidecar."""
 
-    key = (
-        _context_key(embeddings.sparkSession),
-        id(embeddings),
-        id_col,
-        vec_col,
-        n,
-    )
-    hit = _SAMPLE_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
-    live = key[0]
-    for k in [k for k in _SAMPLE_CACHE if k[0] != live]:
-        del _SAMPLE_CACHE[k]
-    while len(_SAMPLE_CACHE) >= _SAMPLE_CACHE_MAX:
-        del _SAMPLE_CACHE[next(iter(_SAMPLE_CACHE))]
-    rows = embeddings.select(id_col, vec_col).orderBy(id_col).limit(n).collect()
-    _SAMPLE_CACHE[key] = (embeddings, rows)
-    return rows
+    def build() -> tuple[DataFrame, list]:
+        while len(_SAMPLE_CACHE) >= _SAMPLE_CACHE_MAX:
+            del _SAMPLE_CACHE[next(iter(_SAMPLE_CACHE))]
+        sample = embeddings.select(id_col, vec_col).orderBy(id_col).limit(n)
+        return embeddings, sample.collect()
+
+    key = (id(embeddings), id_col, vec_col, n)
+    return session_memo(_SAMPLE_CACHE, embeddings.sparkSession, key, build)[1]
 
 
 def clear_sample_cache() -> None:
-    """Drop every cached training sample (ADVICE r8 #3). Call after
-    rewriting a corpus the current session already sampled (make_sf1.py
-    does) — otherwise IVF/PQ/SemDeDup/k-means quantizers keep training
-    on the pre-rewrite rows for the rest of the session."""
+    """Drop every cached training sample. Call after rewriting a corpus
+    the current session already sampled (make_sf1.py does) — otherwise
+    IVF/PQ/SemDeDup/k-means quantizers keep training on the pre-rewrite
+    rows for the rest of the session."""
     _SAMPLE_CACHE.clear()
 
 

@@ -19,7 +19,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from spendinganalysisetl_spark.catalog import load_table, local_table
+from spendinganalysisetl_spark.catalog import load_table, local_table, session_memo
 from spendinganalysisetl_spark.operators import report
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -57,45 +57,27 @@ def money_sum_sql(expr: str) -> str:
 # the same 3-way join over the fact table. Caching the shared
 # intermediate is the materialized-common-view move a multi-query
 # session makes at any scale; storage is MEMORY_AND_DISK and lazily
-# evicted, so correctness is unaffected. Keyed per (session, sf_dir).
+# evicted, so correctness is unaffected. Keyed per (context, sf_dir, name)
+# through catalog.session_memo.
 
 _SHARED: dict[tuple, DataFrame] = {}
 
 
 def shared(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    from spendinganalysisetl_spark.catalog import _context_key
+    def pinned() -> DataFrame:
+        df = build().persist()
+        # Materialize once at build time: a persisted-but-cold frame
+        # referenced N times in one query (e.g. the banded signature
+        # self-join) runs its build subtree N× CONCURRENTLY — the stages
+        # race before any of them has stored the cached blocks (measured
+        # on the minhash digest chain: 43 s of construction doing the
+        # collect_list aggregation twice). One count() per shared build
+        # per session pins the blocks first; every later scan — including
+        # the N-way self-join — reads the cache.
+        df.count()
+        return df
 
-    # applicationId+startTime, not id(): a recycled CPython address
-    # after a stopped context is GC'd would serve dead-session frames.
-    key = (_context_key(spark), sf_dir, name)
-    hit = _SHARED.get(key)
-    # Same two guards as catalog._RELATIONS (r6 advisor): a frame is
-    # bound to its creating SESSION (spark.newSession() shares the
-    # context but not conf/temp-view catalog), and entries keyed to
-    # stopped contexts should not pin dead plan objects forever.
-    if hit is not None and hit.sparkSession is not spark:
-        try:
-            hit.unpersist()
-        except Exception:
-            pass
-        hit = None
-    if hit is None:
-        live = _context_key(spark)
-        for k in [k for k in _SHARED if k[0] != live]:
-            del _SHARED[k]
-        hit = _SHARED[key] = build().persist()
-        # Materialize ONCE at build time (r12): a persisted-but-cold
-        # frame referenced N times in one query (e.g. the banded
-        # signature self-join) runs its build subtree N× CONCURRENTLY —
-        # the stages race before any of them has stored the cached
-        # blocks (measured on the minhash digest chain: 43 s of
-        # construction doing the collect_list aggregation twice). One
-        # count() per shared build per session pins the blocks first;
-        # every later scan — including the N-way self-join — reads the
-        # cache. Same timed-region attribution as before: the build ran
-        # inside the first consumer's rep either way.
-        hit.count()
-    return hit
+    return session_memo(_SHARED, spark, (sf_dir, name), pinned)
 
 
 _SCOPED: dict[tuple, SparkSession] = {}
@@ -107,39 +89,28 @@ def _stream_session(spark: SparkSession, shuffle_partitions: int) -> SparkSessio
     partition count to ``spark.sql.shuffle.partitions`` of the stream's
     owning session at query start — there is no per-query knob — and
     each state partition pays a per-batch state-store commit, so the
-    single-batch drains here size it to 4-8 (the r3 sweep). Pre-r10
-    that was a set/restore on the CALLER's session — a session-global
-    write, racy under concurrent query construction and sticky if the
-    restore is ever missed (r9 VERDICT ask #8). ``spark.newSession()``
-    shares the SparkContext (and block-manager cache) but owns its
-    SQLConf and temp-view catalog, so the pin is invisible outside the
-    drain; memoized per (context, n) so bench reps don't accumulate
-    sessions. Memory-sink tables register in THIS session's catalog —
-    read them back via the returned session."""
-    from spendinganalysisetl_spark.catalog import _context_key
+    single-batch drains here size it to 4-8. Setting it on the caller's
+    session instead would be a session-global write, racy under
+    concurrent query construction and sticky if a restore is missed.
+    ``spark.newSession()`` shares the SparkContext (and block-manager
+    cache) but owns its SQLConf and temp-view catalog, so the pin is
+    invisible outside the drain. Memory-sink tables register in THIS
+    session's catalog — read them back via the returned session.
 
-    key = (_context_key(spark), shuffle_partitions)
-    hit = _SCOPED.get(key)
-    if hit is None:
-        live = _context_key(spark)
-        for k in [k for k in _SCOPED if k[0] != live]:
-            del _SCOPED[k]
-        hit = _SCOPED[key] = spark.newSession()
-        hit.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-        # newSession() inherits only builder-time SparkConf, NOT the
-        # caller's runtime conf.set state (r10 ADVICE #3). Copy the
-        # load-bearing runtime confs the drains depend on — the drains'
-        # date_format/window math reads the session time zone, and a
-        # driver that pinned its own session to UTC at runtime would
-        # otherwise silently diverge inside the child.
-        for conf_key in ("spark.sql.session.timeZone",):
-            try:
-                hit.conf.set(conf_key, spark.conf.get(conf_key))
-            except Exception:
-                pass
-    return hit
+    ``newSession()`` inherits only builder-time SparkConf, not the
+    caller's runtime ``conf.set`` state, so the caller's session time
+    zone (the drains' date_format/window math reads it) is copied onto
+    the child — and is part of the memo key, so a caller whose zone
+    changed gets a child in its current zone."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+
+    def build() -> SparkSession:
+        child = spark.newSession()
+        child.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        child.conf.set("spark.sql.session.timeZone", tz)
+        return child
+
+    return session_memo(_SCOPED, spark, (shuffle_partitions, tz), build)
 
 
 def _fact_join_hint(
@@ -5009,28 +4980,23 @@ _CLS_WEIGHTS: dict[tuple, tuple[list[int], int]] = {}
 
 
 def _cls_weights(spark: SparkSession) -> tuple[list[int], int]:
-    from spendinganalysisetl_spark.catalog import _context_key
     from spendinganalysisetl_spark.operators.classifier import (
         quantize_weights,
         train_logreg,
     )
 
-    key = (_context_key(spark),)
-    hit = _CLS_WEIGHTS.get(key)
-    if hit is not None:
-        return hit
-    for k in [k for k in _CLS_WEIGHTS if k != key]:
-        del _CLS_WEIGHTS[k]
-    labeled = local_table(
-        spark,
-        [(i, lab, t) for i, (lab, t) in enumerate(_CLS_FIXTURE)],
-        "doc_id long, label int, text string",
-    )
-    w, b = train_logreg(
-        labeled, dim=_CLS_DIM, iters=_CLS_ITERS, lr=_CLS_LR
-    )
-    _CLS_WEIGHTS[key] = quantize_weights(w, b)
-    return _CLS_WEIGHTS[key]
+    def build() -> tuple[list[int], int]:
+        labeled = local_table(
+            spark,
+            [(i, lab, t) for i, (lab, t) in enumerate(_CLS_FIXTURE)],
+            "doc_id long, label int, text string",
+        )
+        w, b = train_logreg(
+            labeled, dim=_CLS_DIM, iters=_CLS_ITERS, lr=_CLS_LR
+        )
+        return quantize_weights(w, b)
+
+    return session_memo(_CLS_WEIGHTS, spark, (), build)
 
 
 def _cls_oracle_sql() -> str:
@@ -6237,7 +6203,6 @@ def _dsir_weights(spark: SparkSession, sf_dir: str) -> list[int]:
     aggregation over the tokenize scan, a 256-row bounded collect,
     then the quantization happens driver-side on exact integers
     (operators/trainprep.py:dsir_quantized_weights)."""
-    from spendinganalysisetl_spark.catalog import _context_key
     from spendinganalysisetl_spark.operators.trainprep import (
         dsir_bucket_stats,
         dsir_quantized_weights,
@@ -6245,21 +6210,15 @@ def _dsir_weights(spark: SparkSession, sf_dir: str) -> list[int]:
 
     import os
 
-    key = (_context_key(spark), os.path.abspath(sf_dir))
-    hit = _DSIR_MEMO.get(key)
-    if hit is None:
-        live = _context_key(spark)
-        for k in [k for k in _DSIR_MEMO if k[0] != live]:
-            del _DSIR_MEMO[k]
+    def build() -> list[int]:
         rows = dsir_bucket_stats(
             load_table(spark, sf_dir, "documents"),
             target_lang=_DSIR_TARGET,
             n_buckets=_DSIR_BUCKETS,
         ).collect()
-        hit = _DSIR_MEMO[key] = dsir_quantized_weights(
-            rows, n_buckets=_DSIR_BUCKETS
-        )
-    return hit
+        return dsir_quantized_weights(rows, n_buckets=_DSIR_BUCKETS)
+
+    return session_memo(_DSIR_MEMO, spark, (os.path.abspath(sf_dir),), build)
 
 
 def _dsir_oracle_sql() -> str:

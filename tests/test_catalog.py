@@ -151,3 +151,72 @@ def test_load_table_rebinds_for_new_session(spark, sf_dir):
         live = catalog._context_key(spark)
         for k in [k for k in catalog._RELATIONS if k[0] != live]:
             del catalog._RELATIONS[k]
+
+
+def test_session_memo_builds_once_per_key(spark):
+    from spendinganalysisetl_spark.catalog import session_memo
+
+    store, calls = {}, []
+
+    def build():
+        calls.append(1)
+        return len(calls)
+
+    assert session_memo(store, spark, ("a",), build) == 1
+    assert session_memo(store, spark, ("a",), build) == 1
+    assert session_memo(store, spark, ("b",), build) == 2
+    assert len(calls) == 2
+
+
+def test_session_memo_drops_other_contexts_on_miss(spark):
+    """Entries of a stopped context are dropped by the next miss; a hit
+    leaves the store alone."""
+    from spendinganalysisetl_spark import catalog
+
+    live = catalog._context_key(spark)
+    stale = (("app-stopped", 0), "x")
+    store = {stale: "dead", (live, "kept"): "live"}
+    assert catalog.session_memo(store, spark, ("kept",), lambda: None) == "live"
+    assert stale in store
+    assert catalog.session_memo(store, spark, ("new",), lambda: "v") == "v"
+    assert set(store) == {(live, "kept"), (live, "new")}
+
+
+def test_session_memo_rebinds_frames_per_session(spark):
+    """A frame made by another session of the same context is released
+    and rebuilt for the caller; any other value is shared."""
+    from spendinganalysisetl_spark.catalog import session_memo
+
+    store = {}
+    a = session_memo(store, spark, ("f",), lambda: spark.range(3).persist())
+    token = session_memo(store, spark, ("v",), object)
+    s2 = spark.newSession()
+    b = session_memo(store, s2, ("f",), lambda: s2.range(3).persist())
+    try:
+        assert b is not a and b.sparkSession is s2
+        assert not a.is_cached and b.is_cached
+        assert session_memo(store, s2, ("f",), lambda: None) is b
+        assert session_memo(store, s2, ("v",), object) is token
+    finally:
+        b.unpersist()
+
+
+def test_shared_rebinds_for_new_session(spark, sf_dir):
+    """registry.shared: one persisted build per (session, sf_dir, name);
+    a new session gets its own persisted frame and the old one is
+    released."""
+    from spendinganalysisetl_spark import registry
+
+    name = "test_shared_rebind_probe"
+    s2 = spark.newSession()
+    try:
+        a = registry.shared(spark, sf_dir, name, lambda: spark.range(5))
+        assert registry.shared(spark, sf_dir, name, lambda: None) is a
+        assert a.is_cached
+        b = registry.shared(s2, sf_dir, name, lambda: s2.range(5))
+        assert b is not a and b.sparkSession is s2
+        assert b.is_cached and not a.is_cached
+        assert b.count() == 5
+    finally:
+        for k in [k for k in registry._SHARED if k[2] == name]:
+            registry._SHARED.pop(k).unpersist()

