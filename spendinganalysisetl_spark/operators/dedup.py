@@ -34,8 +34,6 @@ from spendinganalysisetl_spark.functions.text import (
 )
 from spendinganalysisetl_spark.partitioning import spread as _spread
 
-_MAX_LONG = (1 << 63) - 1
-
 
 def _normed(documents: DataFrame) -> DataFrame:
     """(doc_id, norm) with the normalized text MATERIALIZED behind an
@@ -112,10 +110,9 @@ def dedup_stats(documents: DataFrame) -> DataFrame:
 
 def shingle_table(documents: DataFrame, shingle_n: int = 5) -> DataFrame:
     """(doc_id, shh, n_sh, nh_sh) — the per-document shingle-DIGEST
-    table BOTH halves of the MinHash pipeline read (r12, guide §8 +
-    VERDICT r11 ask #1: one corpus normalize+shingle+hash scan — the
-    signature build and the Jaccard verify previously each re-normalized
-    and re-shingled the corpus).
+    table BOTH halves of the MinHash pipeline read, so the signature
+    build and the Jaccard verify share one corpus
+    normalize+shingle+hash scan instead of each re-shingling the corpus.
 
     - ``shh``: the 64-bit xxhash64 digest of each distinct shingle — the
       SAME ``h`` the signature family has always fed into
@@ -178,7 +175,7 @@ def _minhash_signatures(
     string hash ``h`` is read from its ``shh`` column instead of being
     recomputed from the corpus (identical values by construction), so a
     session that shares the table pays the normalize+shingle+hash scan
-    once across the signature and verify branches (r12).
+    once across the signature and verify branches.
     """
     if shingled is not None:
         h = shingled.select("doc_id", F.explode("shh").alias("h"))
@@ -239,16 +236,19 @@ def minhash_lsh_pairs(
     shares ONE of each per session between this operator and
     ``lsh_cluster_stars`` (identical n_hashes/bands/shingle_n →
     identical tables; the normalize+shingle+hash corpus scan behind
-    them is both queries' dominant cost, and r12 made it ONE scan:
-    signature and verify both read the shared shingle table).
+    them is both queries' dominant cost, and it runs ONCE: signature
+    and verify both read the shared shingle table).
+    ``minhash_lsh_pairs_portable`` runs this same band join and verify
+    over portable band keys, so everything but the hash stage is
+    oracle-checked.
 
-    Verify (r12, guide §2.3/§4.2 — rewritten after the sf1 profile put
-    84 s cold / 15 s warm on this ONE stage): the old form shuffled the
-    per-doc shingle STRING arrays through two joins and ran the
-    interpreted ``array_intersect`` over ~700-element string arrays for
-    every candidate pair (sf1: 1.4M pairs → ~2×10⁹ UTF8String hash/eq
-    ops, and ~15 KB of array payload per pair through the second
-    exchange). Now a two-phase check, both phases exact in composition:
+    Verify: a single-phase check would shuffle the per-doc shingle
+    STRING arrays through two joins and run the interpreted
+    ``array_intersect`` over ~700-element string arrays for every
+    candidate pair (sf1: 1.4M pairs → ~2×10⁹ UTF8String hash/eq ops,
+    ~15 KB of array payload per pair through the second exchange) —
+    measured 84 s cold / 15 s warm for that one stage at sf1. The
+    verify is therefore two-phase, both phases exact in composition:
 
     1. **Hash screen** — the same per-pair join shape but over the
        64-bit digests (``shh``, 8 bytes/element, JVM long equality):
@@ -269,11 +269,10 @@ def minhash_lsh_pairs(
        intersection and Jaccard — bit-identical output to the
        single-phase form, at ~1/500th the string-kernel work.
 
-    ``broadcast_candidates_max`` (r11, guide §3.2/§8; r12 probe
-    deferral per VERDICT ask #7): below the gate the candidate-id set
+    ``broadcast_candidates_max``: below the gate the candidate-id set
     broadcasts into the shingle-table semi-joins (the corpus payload
     never moves for a membership decision). The count probe — a Spark
-    job — now runs ONLY when ``banded`` was supplied pre-cached (the
+    job — runs ONLY when ``banded`` was supplied pre-cached (the
     registry path: one cheap job over the session-shared cache); with
     an inline build the operator fires no job during query construction
     and keeps the scale-safe shuffle-join arms, which AQE upgrades from
@@ -300,7 +299,7 @@ def minhash_lsh_pairs(
         # twice. The banded signature table is tiny (docs × bands rows
         # of 3 longs) — cache it.
         banded = banded_signatures(sig, n_hashes, bands).cache()
-        probe_ok = False  # inline build: no job at construction (r12)
+        probe_ok = False  # inline build: no job at construction
     else:
         probe_ok = True  # pre-cached shared table: the count is cheap
     left = banded.alias("a")
@@ -413,13 +412,12 @@ def minhash_lsh_pairs(
     # Phase 2: exact string-set Jaccard for the (tiny) survivor set.
     # |A∪B| = |A|+|B|−|A∩B| — one set operation per pair. The string
     # shingle sets are rebuilt from the corpus for CANDIDATE docs (the
-    # same semi-join slice the pre-r12 verify built — keyed on cand_ids,
-    # NOT on the survivors: a survivor-keyed slice would reference the
-    # screen plan three times, and an uncached-at-plan-time subtree
-    # referenced N times materializes N× concurrently on first
-    # execution — the first cut measured a 128 s action from exactly
-    # that; `survivors` below is referenced exactly ONCE so the screen
-    # runs once). Keeping string arrays in the shared digest table
+    # semi-join slice keyed on cand_ids, NOT on the survivors: a
+    # survivor-keyed slice would reference the screen plan three times,
+    # and an uncached-at-plan-time subtree referenced N times
+    # materializes N× concurrently on first execution — the first cut
+    # measured a 128 s action from exactly that; `survivors` below is
+    # referenced exactly ONCE so the screen runs once). Keeping string arrays in the shared digest table
     # instead would double its cache footprint for a phase that reads a
     # few thousand rows. SHUFFLE_HASH on the survivor side of the pair
     # joins: broadcast would need a size the plan can't know (survivor
@@ -495,27 +493,24 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash_signatures(documents: DataFrame, bits: int = 64) -> DataFrame:
-    """64-bit SimHash per doc: per-token xxhash64, bit-vote via sum of
-    ±1 per bit position, sign → bit.
+def simhash_signatures(hashed: DataFrame, bits: int = 64) -> DataFrame:
+    """SimHash per doc from per-token hashes ``(doc_id, h)``: bit-vote
+    via sum of ±1 per bit position over the low ``bits`` bits, sign →
+    bit.
 
-    Physical shape mirrors ``_minhash_signatures``: explode tokens →
-    one xxhash64 per token → hash-aggregate with ``bits`` set-bit-count
-    ``sum`` columns plus one token count. The ±1 vote never needs to be
-    materialized: vote_i = 2·setbits_i − n, so bit i of the signature is
-    set iff ``2·c_i > n`` — the recombine is a mask projection over the
-    wide aggregate row. Everything — Generate, the 64 sums, the
-    recombine — runs inside whole-stage codegen. Measured at sf0.1:
-    ~0.9 s warm vs ~3.6 s for conditional-``when`` sums and ~2.4 s for
-    the earlier HOF fold (``aggregate``/``zip_with`` re-building a
-    64-long accumulator array per token, interpreted). Masks use JVM
-    ``shiftleft`` — 1 << 63 wraps to Long.MIN_VALUE JVM-side, whereas a
-    Python literal 2**63 overflows py4j's signed long transport.
+    Physical shape mirrors ``_minhash_signatures``: hash-aggregate with
+    ``bits`` set-bit-count ``sum`` columns plus one token count. The ±1
+    vote never needs to be materialized: vote_i = 2·setbits_i − n, so
+    bit i of the signature is set iff ``2·c_i > n`` (a tie gives 0) —
+    the recombine is a mask projection over the wide aggregate row.
+    Everything — Generate, the sums, the recombine — runs inside
+    whole-stage codegen. Measured at sf0.1: ~0.9 s warm vs ~3.6 s for
+    conditional-``when`` sums and ~2.4 s for the earlier HOF fold
+    (``aggregate``/``zip_with`` re-building a 64-long accumulator array
+    per token, interpreted). Masks use JVM ``shiftleft`` — 1 << 63 wraps
+    to Long.MIN_VALUE JVM-side, whereas a Python literal 2**63 overflows
+    py4j's signed long transport.
     """
-    tok = _normed(documents).select(
-        "doc_id", F.explode(ws_tokens(F.col("norm"))).alias("t")
-    )
-    h = tok.select("doc_id", F.xxhash64("t").alias("h"))
     # Both wide stages are SQL expression strings (one py4j round trip
     # per column / one for the whole recombine chain) — building them
     # Column-op by Column-op cost ~1.7 s of driver time PER plan
@@ -523,7 +518,7 @@ def simhash_signatures(documents: DataFrame, bits: int = 64) -> DataFrame:
     # bitwiseORs: the masks are disjoint so sum == or, and Catalyst
     # codegens a 64-term Add far better than a 64-deep OR tree
     # (measured 1.1 s vs 7.5 s cold at sf0.1).
-    counts = h.groupBy("doc_id").agg(
+    counts = hashed.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n"),
         *[
             F.expr(f"sum(shiftrightunsigned(h, {i}) & 1) AS c{i}")
@@ -538,16 +533,15 @@ def simhash_signatures(documents: DataFrame, bits: int = 64) -> DataFrame:
     return counts.select("doc_id", F.expr(f"({sig}) AS simhash"))
 
 
-def simhash_near_pairs(
-    documents: DataFrame, max_hamming: int = 3, prefix_bits: int = 16
+def _simhash_pairs(
+    hashed: DataFrame, bits: int, prefix_bits: int, max_hamming: int
 ) -> DataFrame:
-    """SimHash near-dup pairs: block on the signature's top prefix bits
-    (equi-join — candidates share a block), verify by popcount of XOR.
-    A production variant would use multiple rotated blocks; one block
-    keeps the oracle simple while exercising the plan shape."""
-    sig = simhash_signatures(documents)
-    blocked = sig.withColumn(
-        "block", F.shiftrightunsigned("simhash", 64 - prefix_bits)
+    """Everything after the hash stage, shared by the scale and portable
+    SimHash operators: vote (:func:`simhash_signatures`) → block on the
+    top ``prefix_bits`` of the ``bits``-bit signature (equi-join —
+    candidates share a block) → popcount-of-XOR verify → sorted pairs."""
+    blocked = simhash_signatures(hashed, bits).withColumn(
+        "block", F.shiftrightunsigned("simhash", bits - prefix_bits)
     ).cache()  # self-join below references it twice — without this the
     # whole tokenize→vote pipeline runs twice.
     a = blocked.select(
@@ -569,6 +563,22 @@ def simhash_near_pairs(
     )
 
 
+def simhash_near_pairs(
+    documents: DataFrame, max_hamming: int = 3, prefix_bits: int = 16
+) -> DataFrame:
+    """SimHash near-dup pairs: 64-bit signatures from per-token xxhash64
+    over normalized text, then the shared block + popcount pipeline
+    (:func:`_simhash_pairs`). Only the hash stage differs from
+    ``simhash_near_pairs_portable``, so the rest is oracle-checked
+    there. A production variant would use multiple rotated blocks; one
+    block keeps the oracle simple while exercising the plan shape."""
+    tok = _normed(documents).select(
+        "doc_id", F.explode(ws_tokens(F.col("norm"))).alias("t")
+    )
+    hashed = tok.select("doc_id", F.xxhash64("t").alias("h"))
+    return _simhash_pairs(hashed, 64, prefix_bits, max_hamming)
+
+
 def simhash_near_pairs_portable(
     documents: DataFrame,
     bits: int = 32,
@@ -576,15 +586,15 @@ def simhash_near_pairs_portable(
     prefix_bits: int = 12,
     id_cap: int | None = 1000,
 ) -> DataFrame:
-    """Oracle-checkable SimHash near-dup pairs: same pipeline shape as
-    ``simhash_near_pairs`` (per-token hash → bit-vote → prefix block →
-    popcount verify) but on a 32-bit md5-fold hash
+    """Oracle-checkable SimHash near-dup pairs: the
+    ``simhash_near_pairs`` pipeline (:func:`_simhash_pairs`) fed a
+    32-bit md5-fold hash of the raw tokens
     (``functions.text.hex_fold`` over 8 hex chars) that DuckDB
     reproduces bit-for-bit — the differential-correctness proof for the
-    SimHash family, like ``minhash_lsh_pairs_portable`` for MinHash.
-    The xxhash64 64-bit variant stays the scale path. Capped to the
-    first ``id_cap`` docs: md5-on-string is several times the per-token
-    cost of the JVM-native hash.
+    SimHash family's vote, block and verify. The xxhash64 64-bit variant
+    stays the scale path. Capped to the first ``id_cap`` docs:
+    md5-on-string is several times the per-token cost of the JVM-native
+    hash.
     """
     from spendinganalysisetl_spark.functions.text import hex_fold
 
@@ -592,39 +602,8 @@ def simhash_near_pairs_portable(
     tok = _spread(base.select("doc_id", "text")).select(
         "doc_id", F.explode(ws_tokens(F.col("text"))).alias("t")
     )
-    h = tok.select("doc_id", hex_fold(F.md5("t"), 1, width=8).alias("h"))
-    # SQL expression strings for the wide stages — see simhash_signatures.
-    counts = h.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.expr(f"sum(shiftrightunsigned(h, {i}) & 1) AS c{i}")
-            for i in range(bits)
-        ],
-    )
-    sig_chain = " + ".join(
-        f"(CASE WHEN c{i} * 2 > n THEN shiftleft(CAST(1 AS BIGINT), {i}) "
-        "ELSE CAST(0 AS BIGINT) END)"
-        for i in range(bits)
-    )
-    sig = counts.select("doc_id", F.expr(f"({sig_chain}) AS simhash"))
-    blocked = sig.withColumn(
-        "block", F.shiftrightunsigned("simhash", bits - prefix_bits)
-    ).cache()  # self-join below — don't run tokenize→vote twice
-    a = blocked.select(
-        F.col("doc_id").alias("id_a"), F.col("simhash").alias("s_a"), "block"
-    )
-    b = blocked.select(
-        F.col("doc_id").alias("id_b"), F.col("simhash").alias("s_b"), "block"
-    )
-    return (
-        a.join(b, ["block"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", F.bit_count(F.col("s_a").bitwiseXOR(F.col("s_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .repartition(1)
-        .sortWithinPartitions("id_a", "id_b")
-    )
+    hashed = tok.select("doc_id", hex_fold(F.md5("t"), 1, width=8).alias("h"))
+    return _simhash_pairs(hashed, bits, prefix_bits, max_hamming)
 
 
 def connected_components(
@@ -805,21 +784,18 @@ def lsh_cluster_stars(
     if banded is None:
         sig = _minhash_signatures(documents, n_hashes, shingle_n)
         banded = banded_signatures(sig, n_hashes, bands)
-    return _star_clusters(
-        banded, "band_sig", documents, num_partitions=num_partitions
-    )
+    return _star_clusters(banded, documents, num_partitions=num_partitions)
 
 
 def _star_clusters(
     banded: DataFrame,
-    key_col: str,
     documents: DataFrame,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Shared back half of the star-clustering family: bucket → hub
-    (min doc_id per (band, bucket-key)) → star edges → warm-started
+    (min doc_id per (band, band_sig)) → star edges → warm-started
     connected components → presented cluster report. ``banded`` must
-    carry (doc_id, band, ``key_col``); ``documents`` supplies the
+    carry (doc_id, band, band_sig); ``documents`` supplies the
     vertex set (docs in no bucket collision stay singleton clusters).
     ``num_partitions`` explicitly sizes the eager clustering shuffles
     (see :func:`connected_components`) — these tables are band/label-
@@ -833,8 +809,8 @@ def _star_clusters(
             else df.repartition(num_partitions, *cols)
         )
 
-    with_hub = _part(banded, "band", key_col).withColumn(
-        "hub", F.min("doc_id").over(Window.partitionBy("band", key_col))
+    with_hub = _part(banded, "band", "band_sig").withColumn(
+        "hub", F.min("doc_id").over(Window.partitionBy("band", "band_sig"))
     ).cache()  # feeds both the edge set and the warm-start labels
     edges = _part(
         with_hub.filter(F.col("doc_id") != F.col("hub")).select(
@@ -894,47 +870,45 @@ def lsh_cluster_stars_portable(
         if id_cap is None
         else documents.filter(F.col("doc_id") < id_cap)
     )
-    return _star_clusters(
-        banded, "band_key", base, num_partitions=num_partitions
-    )
+    return _star_clusters(banded, base, num_partitions=num_partitions)
 
 
-def _portable_sig_bands(
-    documents: DataFrame,
-    n_hashes: int,
-    bands: int,
-    shingle_n: int,
-    id_cap: int | None,
-):
-    """Shared front half of the portable MinHash family: (cached)
-    shingle sets and (cached) per-band signature keys."""
+def _portable_bands(
+    ex: DataFrame, key: str, n_hashes: int, bands: int
+) -> DataFrame:
+    """(``key``, band, band_sig) — banded signatures of the portable
+    md5-fold Kirsch-Mitzenmacher MinHash family over ``ex``, one
+    ``(key, s)`` row per shingle string ``s``: md5 → two hex folds →
+    ``min(h1 + i*h2)`` per family member → one struct key per band.
+    Every step is reproducible outside the JVM, so DuckDB and pure-Python
+    oracles recompute the keys bit-for-bit. The struct (not a hash of
+    it) is the band key, so equal keys mean equal signature rows."""
     from spendinganalysisetl_spark.functions.text import hex_fold
 
-    assert n_hashes <= 8, "portable family: h1 + i*h2 overflows beyond i=7"
+    if n_hashes > 8:
+        # The hex_fold family contract: i < 8 keeps h1 + i*h2 (two
+        # 56-bit folds) under 2^59, the range the oracles reproduce.
+        raise ValueError(
+            f"portable MinHash supports n_hashes <= 8, got {n_hashes}"
+        )
     rows_per_band = n_hashes // bands
-    base = documents if id_cap is None else documents.filter(F.col("doc_id") < id_cap)
-    shingled = _spread(
-        base.select("doc_id", norm_text(F.col("text")).alias("norm"))
-    ).select("doc_id", char_shingles(F.col("norm"), shingle_n).alias("sh"))
-    shingled = shingled.cache()  # reused: signature build + Jaccard verify
-    ex = shingled.select("doc_id", F.explode("sh").alias("s"))
     # md5 then the two folds in their OWN projections: each 14-op fold
     # chain appears once in the plan, and the n family members are
     # trivial affine combinations inside the aggregate.
-    hm = ex.select("doc_id", F.md5("s").alias("hx"))
+    hm = ex.select(key, F.md5("s").alias("hx"))
     hh = hm.select(
-        "doc_id",
+        key,
         hex_fold(F.col("hx"), 1).alias("h1"),
         hex_fold(F.col("hx"), 15).alias("h2"),
     )
-    sig = hh.groupBy("doc_id").agg(
+    sig = hh.groupBy(key).agg(
         *[
             F.expr(f"min(h1 + CAST({i} AS BIGINT) * h2) AS m{i}")
             for i in range(n_hashes)
         ]
     )
-    banded = sig.select(
-        "doc_id",
+    return sig.select(
+        key,
         F.posexplode(
             F.array(
                 *[
@@ -947,9 +921,25 @@ def _portable_sig_bands(
                     for b in range(bands)
                 ]
             )
-        ).alias("band", "band_key"),
+        ).alias("band", "band_sig"),
     )
-    return shingled, banded.cache()
+
+
+def _portable_sig_bands(
+    documents: DataFrame,
+    n_hashes: int,
+    bands: int,
+    shingle_n: int,
+    id_cap: int | None,
+):
+    """Shared front half of the portable MinHash family over documents:
+    (cached) shingle sets and (cached) per-band signature keys."""
+    base = documents if id_cap is None else documents.filter(F.col("doc_id") < id_cap)
+    shingled = _normed(base).select(
+        "doc_id", char_shingles(F.col("norm"), shingle_n).alias("sh")
+    ).cache()  # reused: signature build + Jaccard verify
+    ex = shingled.select("doc_id", F.explode("sh").alias("s"))
+    return shingled, _portable_bands(ex, "doc_id", n_hashes, bands).cache()
 
 
 def minhash_lsh_pairs_portable(
@@ -960,33 +950,60 @@ def minhash_lsh_pairs_portable(
     jaccard_threshold: float = 0.6,
     id_cap: int | None = 1000,
 ) -> DataFrame:
-    """Oracle-checkable MinHash+LSH near-dup pairs: identical pipeline
-    shape to ``minhash_lsh_pairs`` (shingle → minhash → band → bucket
-    join → exact-Jaccard verify) but built on the portable md5-fold
-    Kirsch-Mitzenmacher hash family (``functions.text.hex_fold``) so a
-    DuckDB oracle reproduces the signatures bit-for-bit — this is the
-    differential-correctness proof for the whole MinHash family; the
-    xxhash64 variant stays the scale path (cheaper per-value hash,
-    wider signature). Capped to the first ``id_cap`` docs because the
-    md5 + hex-fold hashing is several times the per-shingle work of the
-    production variant.
+    """Oracle-checkable MinHash+LSH near-dup pairs: ``minhash_lsh_pairs``
+    itself — its band self-join and two-phase screen-and-confirm verify
+    — fed the portable md5-fold Kirsch-Mitzenmacher band keys
+    (:func:`_portable_bands`) so a DuckDB oracle reproduces the
+    signatures bit-for-bit. This is the differential-correctness proof
+    for the whole MinHash family; only the hash stage differs from the
+    xxhash64 scale path (cheaper per-value hash, wider signature).
+    Capped to the first ``id_cap`` docs because the md5 + hex-fold
+    hashing is several times the per-shingle work of the production
+    variant. The bands arrive pre-cached, so building the query runs
+    ``minhash_lsh_pairs``' one candidate-count job.
     """
-    shingled, banded = _portable_sig_bands(
-        documents, n_hashes, bands, shingle_n, id_cap
+    base = documents if id_cap is None else documents.filter(F.col("doc_id") < id_cap)
+    _, banded = _portable_sig_bands(base, n_hashes, bands, shingle_n, None)
+    return minhash_lsh_pairs(
+        base,
+        n_hashes,
+        bands,
+        shingle_n,
+        jaccard_threshold,
+        banded=banded,
+        shingled=shingle_table(base, shingle_n).cache(),
     )
-    cand = (
-        banded.alias("a")
+
+
+def _band_probe(probe: DataFrame, index: DataFrame) -> DataFrame:
+    """Distinct ``(id_a < id_b)`` candidate pairs of ``probe`` rows
+    against an ``index`` band table, both (doc_id, band, band_sig). The
+    ``!=`` + least/greatest form finds pairs in either id order, which
+    a probe of the batch alone needs; a full self-join
+    (``minhash_lsh_pairs``) keeps ``<`` instead, which halves the join
+    output."""
+    return (
+        probe.alias("p")
         .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            index.alias("x"),
+            (F.col("p.band") == F.col("x.band"))
+            & (F.col("p.band_sig") == F.col("x.band_sig"))
+            & (F.col("p.doc_id") != F.col("x.doc_id")),
         )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .select(
+            F.least("p.doc_id", "x.doc_id").alias("id_a"),
+            F.greatest("p.doc_id", "x.doc_id").alias("id_b"),
+        )
         .distinct()
     )
-    sh_a = shingled.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = shingled.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
+
+
+def _jaccard_verify(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """Exact shingle-set Jaccard over candidate pairs ``(id_a, id_b)``,
+    with shingle sets ``(doc_id, sh)``; sorted ``(id_a, id_b, jaccard)``
+    rows at or above ``threshold``."""
+    sh_a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
+    sh_b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     return (
         cand.join(sh_a, "id_a")
         .join(sh_b, "id_b")
@@ -995,7 +1012,7 @@ def minhash_lsh_pairs_portable(
             F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
             / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
         )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
         .repartition(1)
         .sortWithinPartitions("id_a", "id_b")
@@ -1020,7 +1037,7 @@ def incremental_near_dup(
 
     Scale shape: in production the full band table is a STORED index
     (banded signatures persist next to the corpus, bucketed on
-    (band, band_key)); an arriving batch shingles and signs ONLY its own
+    (band, band_sig)); an arriving batch shingles and signs ONLY its own
     documents, the probe is a bucket-pruned equi-join, and verified new
     pairs append to the pair/cluster store — per-batch cost is
     O(batch × bands), independent of corpus size. Here both sides
@@ -1032,36 +1049,8 @@ def incremental_near_dup(
         documents, n_hashes, bands, shingle_n, id_cap
     )
     is_batch = (F.col("doc_id") % batch_mod) == batch_rem
-    probe = banded.filter(is_batch)
-    cand = (
-        probe.alias("p")
-        .join(
-            banded.alias("x"),
-            (F.col("p.band") == F.col("x.band"))
-            & (F.col("p.band_key") == F.col("x.band_key"))
-            & (F.col("p.doc_id") != F.col("x.doc_id")),
-        )
-        .select(
-            F.least("p.doc_id", "x.doc_id").alias("id_a"),
-            F.greatest("p.doc_id", "x.doc_id").alias("id_b"),
-        )
-        .distinct()
-    )
-    sh_a = shingled.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = shingled.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .repartition(1)
-        .sortWithinPartitions("id_a", "id_b")
-    )
+    cand = _band_probe(banded.filter(is_batch), banded)
+    return _jaccard_verify(cand, shingled, jaccard_threshold)
 
 
 def near_dup_index(
@@ -1079,14 +1068,14 @@ def near_dup_index(
     per-batch half that reads these instead of recomputing the corpus.
 
     The banded side carries ``bk`` — a scalar xxhash64 of (band,
-    band_key) — because the signature key itself is a STRUCT, which
+    band_sig) — because the signature key itself is a STRUCT, which
     neither ``bucketBy`` layouts nor IN-pushdown handle; the scalar is
     the storage/pruning key, the struct stays in the join condition so
     a hash collision can never produce a false pair."""
     shingled, banded = _portable_sig_bands(
         documents, n_hashes, bands, shingle_n, id_cap
     )
-    return shingled, banded.withColumn("bk", F.xxhash64("band", "band_key"))
+    return shingled, banded.withColumn("bk", F.xxhash64("band", "band_sig"))
 
 
 def probe_near_dup_batch(
@@ -1130,20 +1119,7 @@ def probe_near_dup_batch(
         ]
         if len(keys) <= max_probe_keys:
             idx = index_banded.filter(F.col("bk").isin(keys))
-    cand = (
-        b_banded.alias("p")
-        .join(
-            idx.alias("x"),
-            (F.col("p.band") == F.col("x.band"))
-            & (F.col("p.band_key") == F.col("x.band_key"))
-            & (F.col("p.doc_id") != F.col("x.doc_id")),
-        )
-        .select(
-            F.least("p.doc_id", "x.doc_id").alias("id_a"),
-            F.greatest("p.doc_id", "x.doc_id").alias("id_b"),
-        )
-        .distinct()
-    ).cache()
+    cand = _band_probe(b_banded, idx).cache()
     # Shingle lookup for the verify: batch shingles are already in hand;
     # history shingles are point reads of the store, pruned by the
     # candidates' ids (bounded by the batch's candidate fan-out).
@@ -1159,21 +1135,7 @@ def probe_near_dup_batch(
         if len(ids) <= max_probe_keys:
             hist_sh = index_shingled.filter(F.col("doc_id").isin(ids))
     sh = b_shingled.unionByName(hist_sh).dropDuplicates(["doc_id"])
-    sh_a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .repartition(1)
-        .sortWithinPartitions("id_a", "id_b")
-    )
+    return _jaccard_verify(cand, sh, jaccard_threshold)
 
 
 def fuzzy_pairs_levenshtein(
@@ -1254,7 +1216,7 @@ def line_boilerplate_stats(
     chased with a pair-verify — boilerplate flagging is a recall
     filter, not a join).
 
-    ``broadcast_flags`` (r11, guide §3.1): the final flag join attaches
+    ``broadcast_flags``: the final flag join attaches
     the flagged-line vocabulary back to the PER-OCCURRENCE line table —
     the largest table in the plan — and without a hint the planner
     sort-merge-joins it, exchanging every occurrence on the line key
@@ -1283,13 +1245,8 @@ def line_boilerplate_stats(
     registry oracle ``line_boilerplate_minhash`` reproduces it in
     DuckDB SQL at the driver's check scales.
     """
-    from spendinganalysisetl_spark.functions.text import (
-        hex_fold,
-        shingles_of_tokens,
-    )
+    from spendinganalysisetl_spark.functions.text import shingles_of_tokens
 
-    assert n_hashes <= 8, "portable family: h1 + i*h2 overflows beyond i=7"
-    rows_per_band = n_hashes // bands
     toks = _spread(documents.select("doc_id", "text")).select(
         "doc_id", ws_tokens(F.col("text")).alias("toks")
     )
@@ -1317,46 +1274,18 @@ def line_boilerplate_stats(
             F.split(F.col("line"), " "), gram, _inline=True
         ).alias("sh"),
     )
-    ex = sh.select("line", F.explode("sh").alias("g"))
-    # md5 once, both folds in their own projection (hex_fold contract:
-    # the 14-op fold chains appear once in the plan each).
-    hm = ex.select("line", F.md5("g").alias("hx"))
-    hh = hm.select(
-        "line",
-        hex_fold(F.col("hx"), 1).alias("h1"),
-        hex_fold(F.col("hx"), 15).alias("h2"),
-    )
-    sig = hh.groupBy("line").agg(
-        *[
-            F.expr(f"min(h1 + CAST({i} AS BIGINT) * h2) AS m{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    line_bands = sig.select(
-        "line",
-        F.posexplode(
-            F.array(
-                *[
-                    F.struct(
-                        *[
-                            F.col(f"m{b * rows_per_band + r}").alias(f"k{r}")
-                            for r in range(rows_per_band)
-                        ]
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "band_key"),
-    ).cache()  # reused: bucket support + boiler-line lookup
+    ex = sh.select("line", F.explode("sh").alias("s"))
+    # reused: bucket support + boiler-line lookup
+    line_bands = _portable_bands(ex, "line", n_hashes, bands).cache()
     support = (
         dl.select("doc_id", "line")
         .join(line_bands, "line")
-        .groupBy("band", "band_key")
+        .groupBy("band", "band_sig")
         .agg(F.countDistinct("doc_id").alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
     )
     boiler = (
-        line_bands.join(support, ["band", "band_key"])
+        line_bands.join(support, ["band", "band_sig"])
         .select("line")
         .distinct()
         .withColumn("is_boiler", F.lit(1))

@@ -2383,9 +2383,11 @@ def _minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared(spark, sf_dir, "minhash_banded_32_8", build)
 
 
-@register("minhash_lsh_pairs")  # no SQL oracle: xxhash64 signatures are
-# engine-internal; ground truth is the exact-Jaccard pytest comparison
-# (tests/test_dedup.py) — driver records rows-only (SURVEY.md §5.1).
+@register("minhash_lsh_pairs")  # rows-only: xxhash64 signatures are
+# engine-internal (SURVEY.md §5.1). Everything but that hash stage — the
+# band self-join and the two-phase verify — is oracle-checked through
+# minhash_lsh_pairs_portable, which runs this same operator; the
+# exact-Jaccard pytest comparison is in tests/test_dedup_similarity.py.
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spendinganalysisetl_spark.operators.dedup import minhash_lsh_pairs
 
@@ -2396,7 +2398,10 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("simhash_near_pairs")  # rows-only for the same reason.
+@register("simhash_near_pairs")  # rows-only: xxhash64 token hashes are
+# engine-internal. Everything but that hash stage — vote, prefix block,
+# popcount verify — is oracle-checked through simhash_near_pairs_portable,
+# which shares the operator's pipeline.
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spendinganalysisetl_spark.operators.dedup import simhash_near_pairs
 
@@ -4026,26 +4031,18 @@ ORDER BY id_a, id_b
 """,
 )
 def q_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differential-correctness proof for the SimHash family: same
-    token→bit-vote→prefix-block→popcount pipeline as
-    ``simhash_near_pairs``, on the engine-portable md5-fold hash so
-    DuckDB reproduces signatures — and therefore blocks, candidates,
-    and hamming distances — bit-for-bit. The xxhash64 64-bit variant
-    stays the scale path.
+    """Differential-correctness proof for the SimHash family: the
+    ``simhash_near_pairs`` token→bit-vote→prefix-block→popcount
+    pipeline itself, fed the engine-portable md5-fold hash so DuckDB
+    reproduces signatures — and therefore blocks, candidates, and
+    hamming distances — bit-for-bit. The xxhash64 64-bit variant stays
+    the scale path.
 
-    Bench floor (adjudicated r8, VERDICT r7 ask #3): the ``id_cap``
-    bound makes data cost SF-independent (~54k tokens), so wall-clock
-    is all fixed cost — measured in one controlled session at sf0.1:
-    first run 6.2 s (whole-stage-codegen JIT of the 33-column
-    vote aggregate + 32-term recombine chain, plus the self-join
-    cache materialization), then 0.55 s/rep warm. The sf1 sidecar's
-    31.5× (4.78 s vs a 0.15 s DuckDB twin) was that first-run compile
-    surviving best-of-3 under a 173-query session's code-cache
-    pressure, not plan cost — and a ≤2× target against a 0.15 s
-    oracle (0.3 s) sits below Spark's per-query scheduling floor for
-    ANY plan. Same precedent as bloom_skip_report's documented floor;
-    the filter is scan-pushed (plan-audited) and the wide aggregate is
-    the measured-fastest vote shape (see simhash_signatures)."""
+    The ``id_cap`` bound makes data cost independent of scale factor
+    (~54k tokens), so wall-clock is all fixed cost: the first run pays
+    whole-stage-codegen compilation of the 33-column vote aggregate and
+    32-term recombine chain (measured at sf0.1: 6.2 s first run, then
+    0.55 s/rep warm)."""
     from spendinganalysisetl_spark.operators.dedup import simhash_near_pairs_portable
 
     return simhash_near_pairs_portable(load_table(spark, sf_dir, "documents"))
@@ -4096,11 +4093,11 @@ ORDER BY id_a, id_b
 
 @register("minhash_lsh_pairs_portable", _pmh_pairs_sql())
 def q_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differential-correctness proof for the MinHash+LSH family: same
-    shingle→minhash→band→bucket-join→verify pipeline as
-    ``minhash_lsh_pairs``, built on the engine-portable md5-fold hash so
-    DuckDB reproduces signatures (and therefore candidates and pairs)
-    bit-for-bit. The xxhash64 variant stays the scale path."""
+    """Differential-correctness proof for the MinHash+LSH family: the
+    ``minhash_lsh_pairs`` band join and two-phase verify themselves, fed
+    engine-portable md5-fold band keys so DuckDB reproduces signatures
+    (and therefore candidates and pairs) bit-for-bit. The xxhash64
+    variant stays the scale path."""
     from spendinganalysisetl_spark.operators.dedup import minhash_lsh_pairs_portable
 
     return minhash_lsh_pairs_portable(load_table(spark, sf_dir, "documents"))

@@ -125,6 +125,49 @@ def test_simhash_portable_matches_scale_variant_semantics(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
+def test_simhash_core_on_planted_hashes(spark):
+    """The vote, block and verify stages both SimHash operators share,
+    on hand-built 8-bit token hashes (2 prefix bits → block = sig >> 6):
+    doc 1's bit 0 is set in all its hashes and bit 1 in a minority;
+    doc 2 ties bit 1 (1 of 2), which must vote 0; doc 5 sets bit 1 in
+    2 of 3; doc 3 is doc 1 plus bit 2; doc 4 sits in block 3, two bits
+    from doc 1 but never compared with it."""
+    from spendinganalysisetl_spark.operators.dedup import (
+        _simhash_pairs,
+        simhash_signatures,
+    )
+
+    planted = {1: [3, 1, 1], 2: [3, 1], 3: [5], 4: [0b11000001], 5: [2, 2, 1]}
+    hashed = spark.createDataFrame(
+        [(d, h) for d, hs in planted.items() for h in hs], "doc_id long, h long"
+    )
+    sigs = {
+        r["doc_id"]: r["simhash"] for r in simhash_signatures(hashed, 8).collect()
+    }
+    assert sigs == {1: 1, 2: 1, 3: 5, 4: 0b11000001, 5: 2}
+    pairs = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in _simhash_pairs(hashed, 8, 2, 2).collect()
+    }
+    # (3, 5) is in block 0 but 3 bits apart: dropped by the verify.
+    assert pairs == {(1, 2): 0, (1, 3): 1, (1, 5): 2, (2, 3): 1, (2, 5): 2}
+
+
+def test_portable_minhash_rejects_overflowing_family(spark, documents):
+    """The portable hash family holds for at most 8 members; a larger
+    ``n_hashes`` is refused while the query is built, not by an
+    ``assert`` that ``python -O`` strips."""
+    from spendinganalysisetl_spark.operators.dedup import (
+        line_boilerplate_stats,
+        minhash_lsh_pairs_portable,
+    )
+
+    with pytest.raises(ValueError, match="n_hashes"):
+        minhash_lsh_pairs_portable(documents, n_hashes=9, bands=3)
+    with pytest.raises(ValueError, match="n_hashes"):
+        line_boilerplate_stats(documents, n_hashes=9, bands=3)
+
+
 def test_lsh_topk_recall_vs_brute_force(spark, embeddings):
     """Bucketed ANN must recover a reasonable fraction of the exact
     top-5 (single-table LSH, no multiprobe → modest recall bar)."""
