@@ -265,17 +265,25 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return symbols
 
 
-def bpe_encode_stats(documents: DataFrame, merges: DataFrame) -> DataFrame:
-    """Per-document BPE stats under a learned merge table: (doc_id,
-    n_words, n_tokens, n_chars, compression = chars/token). The merge
-    ranks broadcast as a plain dict inside the Arrow workers; a
-    per-batch word→tokens cache collapses the Zipf-heavy word
-    distribution so the O(len²) encoder runs once per DISTINCT word
-    per batch."""
-    ranks = {
+def bpe_ranks(merges: DataFrame) -> dict[tuple[str, str], int]:
+    """The ``(left, right) → merge_rank`` mapping of a learned merge
+    table (``bpe_train``), collected once — the form ``encode_word`` and
+    ``bpe_encode_stats`` read."""
+    return {
         (r["left"], r["right"]): r["merge_rank"]
         for r in merges.select("left", "right", "merge_rank").collect()
     }
+
+
+def bpe_encode_stats(
+    documents: DataFrame, ranks: dict[tuple[str, str], int]
+) -> DataFrame:
+    """Per-document BPE stats under learned merge ranks (``bpe_ranks``):
+    (doc_id, n_words, n_tokens, n_chars, compression = chars/token).
+    The ranks broadcast as a plain dict inside the Arrow workers; a
+    per-batch word→tokens cache collapses the Zipf-heavy word
+    distribution so the O(len²) encoder runs once per DISTINCT word
+    per batch."""
     spark_schema = (
         "doc_id long, n_words long, n_tokens long, n_chars long, compression double"
     )

@@ -533,17 +533,22 @@ def simhash_signatures(hashed: DataFrame, bits: int = 64) -> DataFrame:
     return counts.select("doc_id", F.expr(f"({sig}) AS simhash"))
 
 
-def _simhash_pairs(
-    hashed: DataFrame, bits: int, prefix_bits: int, max_hamming: int
+def simhash_blocks(
+    hashed: DataFrame, bits: int = 64, prefix_bits: int = 16
 ) -> DataFrame:
-    """Everything after the hash stage, shared by the scale and portable
-    SimHash operators: vote (:func:`simhash_signatures`) → block on the
-    top ``prefix_bits`` of the ``bits``-bit signature (equi-join —
-    candidates share a block) → popcount-of-XOR verify → sorted pairs."""
-    blocked = simhash_signatures(hashed, bits).withColumn(
+    """Block stage of both SimHash operators: vote
+    (:func:`simhash_signatures`) plus the ``block`` key, the top
+    ``prefix_bits`` of the ``bits``-bit signature. Candidates are pairs
+    that share a block."""
+    return simhash_signatures(hashed, bits).withColumn(
         "block", F.shiftrightunsigned("simhash", bits - prefix_bits)
-    ).cache()  # self-join below references it twice — without this the
-    # whole tokenize→vote pipeline runs twice.
+    )
+
+
+def _simhash_pairs(blocked: DataFrame, max_hamming: int) -> DataFrame:
+    """Pair stage of both SimHash operators over a :func:`simhash_blocks`
+    frame: block equi-join → popcount-of-XOR verify → sorted pairs. The
+    self-join reads ``blocked`` twice, so callers pass it cached."""
     a = blocked.select(
         F.col("doc_id").alias("id_a"), F.col("simhash").alias("s_a"), "block"
     )
@@ -563,20 +568,36 @@ def _simhash_pairs(
     )
 
 
-def simhash_near_pairs(
-    documents: DataFrame, max_hamming: int = 3, prefix_bits: int = 16
-) -> DataFrame:
-    """SimHash near-dup pairs: 64-bit signatures from per-token xxhash64
-    over normalized text, then the shared block + popcount pipeline
-    (:func:`_simhash_pairs`). Only the hash stage differs from
-    ``simhash_near_pairs_portable``, so the rest is oracle-checked
-    there. A production variant would use multiple rotated blocks; one
-    block keeps the oracle simple while exercising the plan shape."""
+def simhash_token_hashes(documents: DataFrame) -> DataFrame:
+    """Hash stage of ``simhash_near_pairs``: ``(doc_id, h)`` with one
+    xxhash64 per whitespace token of the normalized text."""
     tok = _normed(documents).select(
         "doc_id", F.explode(ws_tokens(F.col("norm"))).alias("t")
     )
-    hashed = tok.select("doc_id", F.xxhash64("t").alias("h"))
-    return _simhash_pairs(hashed, 64, prefix_bits, max_hamming)
+    return tok.select("doc_id", F.xxhash64("t").alias("h"))
+
+
+def simhash_near_pairs(
+    documents: DataFrame,
+    max_hamming: int = 3,
+    prefix_bits: int = 16,
+    blocked: DataFrame | None = None,
+) -> DataFrame:
+    """SimHash near-dup pairs: 64-bit signatures from per-token xxhash64
+    over normalized text (:func:`simhash_token_hashes`), then the shared
+    block and pair stages. Only the hash stage differs from
+    ``simhash_near_pairs_portable``, so the rest is oracle-checked
+    there. A production variant would use multiple rotated blocks; one
+    block keeps the oracle simple while exercising the plan shape.
+
+    ``blocked``: a cached ``simhash_blocks`` frame a session shares
+    across calls (``prefix_bits`` is then the builder's). Without it one
+    is built and cached here: the self-join reads it twice."""
+    if blocked is None:
+        blocked = simhash_blocks(
+            simhash_token_hashes(documents), 64, prefix_bits
+        ).cache()
+    return _simhash_pairs(blocked, max_hamming)
 
 
 def simhash_near_pairs_portable(
@@ -587,7 +608,7 @@ def simhash_near_pairs_portable(
     id_cap: int | None = 1000,
 ) -> DataFrame:
     """Oracle-checkable SimHash near-dup pairs: the
-    ``simhash_near_pairs`` pipeline (:func:`_simhash_pairs`) fed a
+    ``simhash_near_pairs`` block and pair stages fed a
     32-bit md5-fold hash of the raw tokens
     (``functions.text.hex_fold`` over 8 hex chars) that DuckDB
     reproduces bit-for-bit — the differential-correctness proof for the
@@ -603,7 +624,8 @@ def simhash_near_pairs_portable(
         "doc_id", F.explode(ws_tokens(F.col("text"))).alias("t")
     )
     hashed = tok.select("doc_id", hex_fold(F.md5("t"), 1, width=8).alias("h"))
-    return _simhash_pairs(hashed, bits, prefix_bits, max_hamming)
+    blocked = simhash_blocks(hashed, bits, prefix_bits).cache()
+    return _simhash_pairs(blocked, max_hamming)
 
 
 def connected_components(

@@ -11,17 +11,20 @@ the engine's north-star LLM-pipeline coverage (SURVEY.md §2.11).
 Scale design
 ------------
 - The corpus NEVER shuffles and never reaches the driver. One Arrow
-  pass (``mapInPandas``) emits per-batch Gramian partials — d(d+1)/2
-  upper-triangle products + d column sums + a count, ~2 145 values per
-  batch at d=64 — and the partials aggregate to one tiny frame. This is
-  the classic tree-aggregation shape: 100 TB of vectors reduce to
-  kilobytes before any exchange.
+  pass (``mapInPandas``) emits one row of Gramian partials per
+  partition — d(d+1)/2 upper-triangle products + d column sums + a
+  count, ~2 145 values at d=64 — and the driver collects those rows
+  once and sums them. This is the classic tree-aggregation shape:
+  100 TB of vectors reduce to kilobytes before anything moves. Driver
+  memory for the collect is one row per partition of the partials
+  stage (d(d+1)/2 + d + 1 doubles, ~17 KB at d=64); the stage's
+  fan-out is capped at the default parallelism (``spread_scaled``).
 - Exactness device (same philosophy as ``functions.scalars.money_sum``):
   vectors are quantized scan-side to integer-valued float64
   (``floor(x·scale + 0.5)``, scale=1000). Products and sums of
   integer-valued float64 are EXACT while |Σ| < 2^53 (batch GEMM in
-  numpy stays integer-valued; Spark's final ``sum`` over batch partials
-  likewise), so the aggregated moments are exact integers, the
+  numpy stays integer-valued; so do the per-partition and driver-side
+  sums, in any order), so the aggregated moments are exact integers, the
   covariance numerator ``n·Σxy − Σx·Σy`` is computed in DECIMAL(38,0)
   with no float error, and the single final integer→double cast +
   division sequence is IEEE-deterministic across engines. DuckDB
@@ -56,46 +59,41 @@ from spendinganalysisetl_spark.partitioning import spread_scaled as _spread
 _SCALE = 1000.0
 
 
-def _tri_index(d: int):
-    """(i, j) pairs for the flattened upper triangle, row-major."""
-    return [(i, j) for i in range(d) for j in range(i, d)]
-
-
 def gramian_partials(
     embeddings: DataFrame,
     vec_col: str = "embedding",
     scale: float = _SCALE,
     spread: bool = True,
 ) -> DataFrame:
-    """One row per Arrow batch: exact integer moments of the quantized
+    """One row per partition: exact integer moments of the quantized
     vectors — ``n``, per-dimension sums ``s`` (length d), and the
     flattened upper-triangle Gramian ``g`` (length d(d+1)/2). All
     values are integer-valued doubles (exact: quantized inputs ≤ ~1e4
-    in magnitude, per-batch sums ≪ 2^53)."""
+    in magnitude, sums ≪ 2^53)."""
     import numpy as np
 
     def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        n, s, g = 0, 0.0, 0.0
         for pdf in batches:
             if pdf.empty:
                 continue
             x = np.stack(pdf[vec_col].to_numpy()).astype("float64")
             q = np.floor(x * scale + 0.5)
-            g = q.T @ q  # integer-valued float64 GEMM — exact
+            n += q.shape[0]
+            s = s + q.sum(axis=0)
+            g = g + q.T @ q  # integer-valued float64 GEMM — exact
+        if n:
             iu = np.triu_indices(g.shape[0])
             yield pd.DataFrame(
-                {
-                    "n": [float(q.shape[0])],
-                    "s": [q.sum(axis=0).tolist()],
-                    "g": [g[iu].tolist()],
-                }
+                {"n": [float(n)], "s": [s.tolist()], "g": [g[iu].tolist()]}
             )
 
-    # Size-adaptive fan-out (r11, guide §2.5): one Python/Arrow task
-    # round-trip per partition for a d(d+1)/2-value partial — at sub-MB
-    # inputs the 32-way fan costs 32 task setups per pass for
-    # microseconds of GEMM each. Partition count provably cannot change
-    # the result: partials are exact integer-valued float64 (module
-    # docstring), so their aggregation is associative.
+    # Size-adaptive fan-out: one Python/Arrow task round-trip per
+    # partition for a d(d+1)/2-value partial — at sub-MB inputs a
+    # full-parallelism fan costs one task setup per core per pass for
+    # microseconds of GEMM each. Partition count cannot change the
+    # result: partials are exact integer-valued float64 (module
+    # docstring), so their sum is the same in any grouping.
     base = embeddings.select(vec_col)
     if spread:
         base = _spread(base)
@@ -104,45 +102,28 @@ def gramian_partials(
     )
 
 
-def _aggregate_moments(
+def _moments(
     embeddings: DataFrame,
     vec_col: str,
     scale: float,
     parts: DataFrame | None = None,
     spread: bool = True,
 ):
-    """Shared fork point: the per-batch partials, PERSISTED (they are
-    |batches| rows of ~d²/2 doubles — kilobytes per 128 MB of corpus),
-    so the three consumers below read the cached tiny frame instead of
-    re-running the corpus scan per branch (forked branches re-execute
-    from source otherwise). Aggregation is posexplode → groupBy(pos) —
-    the exploded frame is |batches|·d²/2 rows, never corpus-sized, and
-    Spark's partial aggregation combines map-side.
+    """Exact corpus moments ``(n, s, g)`` — count, d column sums and the
+    flat upper-triangle Gramian — from ONE collect of the per-partition
+    partials, summed on the driver (exact in any order, module
+    docstring). ``parts`` lets a multi-query session hand in a shared
+    partials frame (registry ``_pca_parts``) so the covariance /
+    projection / scree trio pays the corpus Arrow pass once."""
+    import numpy as np
 
-    ``parts`` lets a multi-query session hand in an ALREADY-persisted
-    partials frame (registry ``shared()`` keys one per (session, sf))
-    so the covariance / projection / scree trio pays the corpus Arrow
-    pass once instead of once per query; ``owns`` in the return tells
-    the caller whether unpersisting is its business."""
-    from pyspark import StorageLevel
-
-    owns = parts is None
     if parts is None:
-        parts = gramian_partials(embeddings, vec_col, scale, spread).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    g_tot = (
-        parts.select(F.posexplode("g").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.sum("v").alias("gsum"))
-    )
-    s_tot = (
-        parts.select(F.posexplode("s").alias("dim", "v"))
-        .groupBy("dim")
-        .agg(F.sum("v").alias("ssum"))
-    )
-    n_tot = parts.agg(F.sum("n").alias("n"))
-    return parts, g_tot, s_tot, n_tot, owns
+        parts = gramian_partials(embeddings, vec_col, scale, spread)
+    rows = parts.collect()
+    n = float(sum(r["n"] for r in rows))
+    s = np.sum([r["s"] for r in rows], axis=0)
+    g = np.sum([r["g"] for r in rows], axis=0)
+    return n, s, g
 
 
 def covariance_matrix(
@@ -152,46 +133,32 @@ def covariance_matrix(
     parts: DataFrame | None = None,
 ) -> DataFrame:
     """Population covariance of the quantized embeddings as flat rows
-    ``(i, j, cov)`` for i ≤ j, rounded to 6dp. Fully distributed: the
-    corpus reduces to per-batch partials; everything after the partial
-    aggregation operates on d- and d²-sized frames (broadcast joins).
+    ``(i, j, cov)`` for i ≤ j, rounded to 6dp. The corpus reduces to
+    per-partition partials; everything after operates on one
+    d(d+1)/2-row literal frame of the collected moments.
 
     cov(i,j) = (n·Σxixj − Σxi·Σxj) / n² / scale², with the numerator
     exact in DECIMAL(38,0) and one deterministic cast-then-divide tail
     (matching the DuckDB oracle's HUGEINT math step for step).
 
-    Cache lifetime: with ``parts=None`` the self-persisted
-    gramian-partials frame is released BEFORE returning — the
-    aggregated moments are bounded (d + d(d+1)/2 + 1 exact values,
-    corpus-independent, the same collect ``_fit_components`` already
-    does), so they are collected once and rebuilt as literal frames,
-    cutting the returned plan's lineage to the cache. A standalone
-    call therefore leaves no persisted frame behind
-    (tests/test_pca.py::test_covariance_standalone_no_cache_leak).
-    Multi-query sessions still pass a shared ``parts``
-    (registry._pca_parts), which this function never unpersists."""
-    parts, g_tot, s_tot, n_tot, owns = _aggregate_moments(
-        embeddings, vec_col, scale, parts
-    )
-    d = int(embeddings.select(F.size(vec_col).alias("d")).first()["d"])
-    if owns:
-        spark = parts.sparkSession
-        g_rows = [(r["pos"], r["gsum"]) for r in g_tot.collect()]
-        s_rows = [(r["dim"], r["ssum"]) for r in s_tot.collect()]
-        n_val = n_tot.first()["n"]
-        parts.unpersist()
-        g_tot = _local_table(spark, g_rows, "pos int, gsum double")
-        s_tot = _local_table(spark, s_rows, "dim int, ssum double")
-        n_tot = _local_table(spark, [(n_val,)], "n double")
-    pairs = _tri_index(d)
-    idx = _local_table(
-        parts.sparkSession,
-        [(p, i, j) for p, (i, j) in enumerate(pairs)],
-        "pos int, i int, j int",
+    Cache lifetime: this function caches nothing. The moments are
+    bounded (d + d(d+1)/2 + 1 exact values, corpus-independent) and
+    become literal rows, so the returned plan has no lineage to the
+    corpus or to a shared ``parts`` frame, and a standalone call leaves
+    no cached frame behind
+    (tests/test_pca.py::test_covariance_standalone_no_cache_leak)."""
+    import numpy as np
+
+    n, s, g = _moments(embeddings, vec_col, scale, parts)
+    moments = _local_table(
+        embeddings.sparkSession,
+        [
+            (int(i), int(j), float(v), float(s[i]), float(s[j]), n)
+            for i, j, v in zip(*np.triu_indices(len(s)), g)
+        ],
+        "i long, j long, gsum double, s_i double, s_j double, n double",
     )
     dec = "decimal(38,0)"
-    si = s_tot.select(F.col("dim").alias("i"), F.col("ssum").alias("s_i"))
-    sj = s_tot.select(F.col("dim").alias("j"), F.col("ssum").alias("s_j"))
     num = (
         F.col("n").cast(dec) * F.col("gsum").cast(dec)
         - F.col("s_i").cast(dec) * F.col("s_j").cast(dec)
@@ -203,15 +170,7 @@ def covariance_matrix(
         / F.lit(scale * scale)
     )
     return (
-        g_tot.join(F.broadcast(idx), "pos")
-        .join(F.broadcast(si), "i")
-        .join(F.broadcast(sj), "j")
-        .crossJoin(F.broadcast(n_tot))
-        .select(
-            F.col("i").cast("long").alias("i"),
-            F.col("j").cast("long").alias("j"),
-            (F.round(cov, 6) + F.lit(0.0)).alias("cov"),
-        )
+        moments.select("i", "j", (F.round(cov, 6) + F.lit(0.0)).alias("cov"))
         .repartition(1)
         .sortWithinPartitions("i", "j")
     )
@@ -225,30 +184,16 @@ def _fit_components(
     parts: DataFrame | None = None,
     spread: bool = True,
 ):
-    """Driver-side tail of the fit: collect the EXACT aggregated moments
-    (d + d(d+1)/2 + 1 values — bounded, corpus-independent), build the
-    covariance matrix, ``eigh`` it, and pin the two eigen ambiguities:
-    order = (eigenvalue desc, index asc), sign = largest-|coefficient|
-    entry positive (first such index on ties)."""
+    """Driver-side tail of the fit: the EXACT moments (``_moments``),
+    the covariance matrix, ``eigh``, and the two eigen ambiguities
+    pinned: order = (eigenvalue desc, index asc), sign =
+    largest-|coefficient| entry positive (first such index on ties)."""
     import numpy as np
 
-    parts, g_tot, s_tot, n_tot, owns = _aggregate_moments(
-        embeddings, vec_col, scale, parts, spread
-    )
-    d = int(embeddings.select(F.size(vec_col).alias("d")).first()["d"])
-    # Bounded collects: d + d(d+1)/2 + 1 exact values, corpus-independent.
-    n = n_tot.first()["n"]
-    s = np.zeros(d)
-    for r in s_tot.collect():
-        s[r["dim"]] = r["ssum"]
+    n, s, flat = _moments(embeddings, vec_col, scale, parts, spread)
+    d = len(s)
     g = np.zeros((d, d))
-    iu = np.triu_indices(d)
-    flat = np.zeros(d * (d + 1) // 2)
-    for r in g_tot.collect():
-        flat[r["pos"]] = r["gsum"]
-    if owns:
-        parts.unpersist()
-    g[iu] = flat
+    g[np.triu_indices(d)] = flat
     g = g + g.T - np.diag(np.diag(g))
     cov = (n * g - np.outer(s, s)) / n / n / (scale * scale)
     evals, evecs = np.linalg.eigh(cov)
@@ -302,7 +247,7 @@ def pca_project(
             )
             yield out
 
-    # Size-adaptive fan-out (r11): per-ROW projection — the emitted
+    # Size-adaptive fan-out: per-ROW projection — the emitted
     # (id, pc, score) values are a pure function of the row, so
     # partition count cannot change them, only their order (and every
     # consumer aggregates or sorts).
@@ -319,7 +264,7 @@ def pca_project(
         # Production core: |corpus|·k rows stay distributed — the
         # canonical single-partition sort below is an oracle/report
         # concern only (a one-task sink over a corpus-sized output is
-        # wrong at scale; presentation-layer boundary, VERDICT r6 #7).
+        # wrong at scale; presentation-layer boundary).
         return out
     return out.repartition(1).sortWithinPartitions(id_col, "pc")
 

@@ -12,6 +12,7 @@ from spendinganalysisetl_spark.operators.bpe import (
     END,
     WORD_RE,
     bpe_encode_stats,
+    bpe_ranks,
     bpe_train,
     encode_word,
     train_reference,
@@ -75,7 +76,7 @@ def test_encode_stats_match_reference(spark):
     }
     got = {
         r["doc_id"]: (r["n_words"], r["n_tokens"], r["n_chars"])
-        for r in bpe_encode_stats(docs, merges).collect()
+        for r in bpe_encode_stats(docs, bpe_ranks(merges)).collect()
     }
     for i, t in enumerate(TEXTS):
         words = re.findall(WORD_RE, t.lower())

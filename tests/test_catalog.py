@@ -11,6 +11,7 @@ that changes types fails here first with a readable diff.
 from __future__ import annotations
 
 import pytest
+from conftest import spark_jobs
 
 from spendinganalysisetl_spark.catalog import TABLES, load_table
 
@@ -220,3 +221,24 @@ def test_shared_rebinds_for_new_session(spark, sf_dir):
     finally:
         for k in [k for k in registry._SHARED if k[2] == name]:
             registry._SHARED.pop(k).unpersist()
+
+
+def test_corpus_queries_build_from_session_state(spark, sf_dir):
+    """Once a session holds the BPE merge ranks and the SimHash block
+    table, building ``bpe_encode_corpus`` or ``simhash_near_pairs``
+    again runs no Spark job: the ranks are a memoized dict in
+    ``registry._SHARED`` and the block table a shared cached frame."""
+    from spendinganalysisetl_spark import catalog, registry
+
+    names = {
+        "bpe_encode_corpus": "bpe_ranks_16",
+        "simhash_near_pairs": "simhash_blocked_64_16",
+    }
+    for query in names:
+        registry.QUERIES[query](spark, sf_dir)
+    live = catalog._context_key(spark)
+    for query, entry in names.items():
+        assert (live, sf_dir, entry) in registry._SHARED
+        with spark_jobs(spark) as jobs:
+            registry.QUERIES[query](spark, sf_dir)
+            assert jobs() == 0, query

@@ -134,6 +134,7 @@ def test_simhash_core_on_planted_hashes(spark):
     from doc 1 but never compared with it."""
     from spendinganalysisetl_spark.operators.dedup import (
         _simhash_pairs,
+        simhash_blocks,
         simhash_signatures,
     )
 
@@ -147,7 +148,7 @@ def test_simhash_core_on_planted_hashes(spark):
     assert sigs == {1: 1, 2: 1, 3: 5, 4: 0b11000001, 5: 2}
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in _simhash_pairs(hashed, 8, 2, 2).collect()
+        for r in _simhash_pairs(simhash_blocks(hashed, 8, 2), 2).collect()
     }
     # (3, 5) is in block 0 but 3 bits apart: dropped by the verify.
     assert pairs == {(1, 2): 0, (1, 3): 1, (1, 5): 2, (2, 3): 1, (2, 5): 2}

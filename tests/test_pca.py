@@ -10,10 +10,12 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from conftest import spark_jobs
 
 from spendinganalysisetl_spark.operators.pca import (
     _SCALE,
     covariance_matrix,
+    gramian_partials,
     pca_project,
     variance_explained,
 )
@@ -105,12 +107,52 @@ def test_variance_explained_scree(spark, vec_df):
 
 
 def test_covariance_standalone_no_cache_leak(spark, vec_df):
-    """ADVICE r8 #2: a standalone covariance_matrix(parts=None) call
-    must not leave its self-persisted gramian-partials frame cached for
-    the session — the bounded moments are collected, the partials
-    unpersisted, and the returned plan rebuilt from literal frames."""
+    """A standalone covariance_matrix(parts=None) call leaves nothing
+    cached for the session: the bounded moments are collected straight
+    from the partials (nothing is persisted) and the returned plan is
+    built from literal rows."""
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
     rows = covariance_matrix(vec_df).collect()
     assert len(rows) > 0
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_moments_exact_under_any_partitioning(spark, vec_df):
+    """The partials are one row per partition (not per Arrow batch: the
+    batch cap here splits every partition into several batches), and
+    the covariance and scree are identical for every partitioning —
+    the partials are exact integers, so their sum is the same in any
+    grouping and order."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        results = []
+        for k in (1, 3, 7):
+            emb = vec_df.repartition(k)
+            parts = gramian_partials(emb, spread=False)
+            assert len(parts.collect()) <= k
+            results.append(
+                (
+                    covariance_matrix(emb, parts=parts).collect(),
+                    variance_explained(emb, k=4, parts=parts).collect(),
+                )
+            )
+    finally:
+        spark.conf.set(key, old)
+    assert results[0] == results[1] == results[2]
+
+
+def test_fit_on_shared_partials_runs_one_job(spark, vec_df):
+    """Building the scree over an already-persisted partials frame (the
+    registry's shared ``_pca_parts``) runs exactly one Spark job: the
+    collect of the partials."""
+    parts = gramian_partials(vec_df).persist()
+    try:
+        parts.count()
+        with spark_jobs(spark) as jobs:
+            variance_explained(vec_df, k=4, parts=parts)
+            assert jobs() == 1
+    finally:
+        parts.unpersist()
