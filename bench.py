@@ -24,7 +24,8 @@ Design notes (SURVEY.md §6):
   the distributed plan, not ``collect()`` overhead.
 - Warm-up (untimed) absorbs first-job costs that a long-running cluster
   amortizes across thousands of queries: whole-stage-codegen compilation
-  (JIT), Python-UDF worker pool startup (~3 s once per executor),
+  (JIT), Python-UDF worker pool startup (~3 s once per executor,
+  measured before the ``pyworker`` daemon),
   parquet footer reads, block-manager and broadcast init. Each query is
   executed once at sf0.001 (same plan shape -> same generated code, so
   the JIT cache is hot) before the timed pass at the target SF measures

@@ -70,7 +70,8 @@ def fake_media_table(
     per 64 rows) instead of inheriting the cluster default: every
     partition of a mapInPandas input pays an Arrow-fed Python worker
     round-trip, and for toy row counts that per-partition cost swamps
-    the decode (32 partitions for 64 rows measured 14 s → ~2 s; 4 → 1
+    the decode (measured before the ``pyworker`` daemon cut the
+    per-task setup: 32 partitions for 64 rows 14 s → ~2 s; 4 → 1
     partitions a further 0.54 s → 0.28 s through the chained
     resize+featurize pipeline). A real media corpus would instead be
     sized by payload bytes via ``files.maxPartitionBytes``."""

@@ -46,7 +46,8 @@ def _fit_centroids(
     a FIXTURE-SIZED input already in one partition, where fanning 32
     rows across 32 partitions makes every Lloyd job pay 32 Python/
     Arrow task setups instead of 1 (measured 11 s → ~1 s for the
-    3-iteration kmeans_fixture fit). The at-scale default stays True —
+    3-iteration kmeans_fixture fit, before the ``pyworker`` daemon cut
+    the per-task setup). The at-scale default stays True —
     coarse file splits plus per-row GEMM need the fan-out. The fit is
     bit-identical either way (order-free exact-integer partials)."""
     import numpy as np
@@ -64,12 +65,13 @@ def _fit_centroids(
     # One spread (shuffle) total, persisted for the fit: every Lloyd
     # iteration then scans the cached partitions — without the persist,
     # each iteration re-pays the scan AND the spread exchange.
-    # Size-adaptive (r11, guide §2.5): every Lloyd pass pays one
+    # Size-adaptive (guide §2.5): every Lloyd pass pays one
     # Python/Arrow task round-trip PER PARTITION for a k×d partial, so
     # fanning a sub-MB corpus to full parallelism costs 32 task setups
-    # per iteration for microseconds of GEMM each (measured at sf0.1:
-    # fit 10.7 s cold / ~1.2 s warm at 32 partitions vs 0.84 s at the
-    # derived 1). Partition count provably cannot change the fit:
+    # per iteration for microseconds of GEMM each (sf0.1, local[4],
+    # warm medians: 0.87 s at the derived 1 partition vs 0.97 s at 4;
+    # 1.2 s at 32 vs 0.84 s at 1 before the ``pyworker`` daemon cut
+    # the per-task setup). Partition count provably cannot change the fit:
     # inputs are float32, so every float64 partial sum is exact
     # (24-bit mantissas + ~30 bits of count headroom < 53) and the
     # driver-side combine is associative — verified bit-identical

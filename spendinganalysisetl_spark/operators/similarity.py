@@ -589,8 +589,9 @@ def clustered_cosine_pairs(
         .applyInPandas(_pairs, "id_a long, id_b long, cos_sim double")
         # repartition(1), NOT coalesce(1): coalesce would merge the
         # post-groupBy stage itself, running every cell's GEMM serially
-        # through one task/one Python worker (r11 interleaved A/B at
-        # sf0.1: 1.95 s coalesced vs 0.49 s with the explicit exchange
+        # through one task/one Python worker (interleaved A/B at sf0.1,
+        # before the ``pyworker`` daemon cut the per-task setup: 1.95 s
+        # coalesced vs 0.49 s with the explicit exchange
         # — the 16 cells' FlatMapGroupsInPandas is exactly the work
         # that must stay parallel; only the thresholded pair rows ship
         # to the single presentation partition).

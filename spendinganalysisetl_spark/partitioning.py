@@ -37,9 +37,12 @@ def spread_scaled(df: DataFrame, bytes_per_task: int = 8 << 20) -> DataFrame:
     Arrow/pandas *partials* stages (k-means Lloyd sums, Gramian moments)
     the per-task cost is dominated by the Python-worker round-trip, so a
     small input fanned to 32 partitions pays 32 Arrow task setups per
-    pass for microseconds of GEMM each: the k-means fit measured
-    10.7 s cold / 1.2 s warm spread vs 0.84 s at 1 partition on an
-    800 KB sf0.1 input. Size comes from the optimizer's estimate for
+    pass for microseconds of GEMM each. On the 800 KB sf0.1 input the
+    k-means fit (8 cells, 3 passes, ``local[4]``) takes 0.87 s warm at
+    1 partition vs 0.97 s at 4 (medians of 5). The 32-partition figures
+    (10.7 s cold / 1.2 s warm vs 0.84 s at 1) predate the worker daemon
+    (``pyworker``), which cut each Python task's setup from ~300 ms to
+    ~100 ms on a 4-vCPU VM. Size comes from the optimizer's estimate for
     the (column-pruned) plan — for the parquet scans these stages read,
     that is the pruned file footprint; at 8 MB/task the fan-out reaches
     full parallelism once the input is executor-memory-sized and the

@@ -7733,8 +7733,8 @@ def q_kmeans_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every Lloyd job pay 32 Python/Arrow task setups; one partition →
     # one task per job. Together with local_table (Arrow LocalRelation,
     # not a per-action-re-evaluated ExistingRDD — see catalog.py) the
-    # fixture prices at ~1.3-1.8 s/rep warm vs ~16 s/rep as first
-    # written (sf0.1 bench session A/B, BENCH_AB_r09.json).
+    # fixture prices at ~0.6 s/rep warm (best of 3, local[4]; ~1.3 s
+    # before the ``pyworker`` daemon) vs ~16 s/rep as first written.
     return kmeans_cluster_profile(emb, k=4, iters=3, seed=4, spread=False)
 
 
