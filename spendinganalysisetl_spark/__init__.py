@@ -16,11 +16,13 @@ Layout
 - ``operators``  the operator inventory: report aggregates, time-series,
                  joins, set ops, windows, rollup, dedup, similarity,
                  text analysis, top-k
-- ``sources``    readers/writers + MERGE-style upsert over parquet
-- ``streaming``  Structured Streaming jobs (tumbling/sliding/session
-                 windows, stateful ops, foreachBatch upsert)
+- ``sources``    MERGE-style upsert over parquet, the HTTP extract, the
+                 external-DB sink, bucketed and Bloom-indexed layouts
+- ``streaming``  Structured Streaming jobs (tumbling/session windows,
+                 dedup, interval join, foreachBatch upsert and DB load)
 - ``multimodal`` binary-column (image/audio) plumbing over mapInPandas
-- ``summarizer`` pluggable report summarizer (deterministic default)
+- ``serving``    the two report read endpoints over the sink
+- ``summarizer`` deterministic template report summary (fi_summary)
 """
 
 __version__ = "0.1.0"

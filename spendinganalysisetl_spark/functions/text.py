@@ -145,13 +145,6 @@ def trigrams_of_tokens(toks: Column) -> Column:
     return F.when(cnt < 3, F.array().cast("array<string>")).otherwise(grams)
 
 
-def word_trigrams(text: Column) -> Column:
-    """Word 3-grams of a raw TEXT column — tokenize + trigrams in one
-    expression. Prefer :func:`trigrams_of_tokens` over a materialized
-    token column in per-corpus pipelines (see its note)."""
-    return trigrams_of_tokens(ws_tokens(text))
-
-
 def fingerprint(text: Column) -> Column:
     """Document fingerprint: md5 of whitespace-normalized lowercase text.
     md5 (not xxhash64) because DuckDB computes the identical digest, so

@@ -62,9 +62,9 @@ from spendinganalysisetl_spark.operators.plancache import (
 
 
 def _edges_degrees(
-    edges: DataFrame, check_dangling: bool, op: str
+    edges: DataFrame, check_dangling: bool
 ) -> tuple[DataFrame, DataFrame, int]:
-    """Shared PageRank setup: cache the edge table, derive the
+    """PageRank setup: cache the edge table, derive the
     (node, deg) table, count nodes, and ENFORCE the no-dangling-node
     precondition (a dst with no out-edges receives mass but
     redistributes none — silently wrong on a directed sink-bearing
@@ -79,7 +79,7 @@ def _edges_degrees(
     if n == 0:
         und.unpersist()
         nd.unpersist()
-        raise ValueError(f"{op}: edge frame is empty (no nodes to rank)")
+        raise ValueError("pagerank: edge frame is empty (no nodes to rank)")
     if check_dangling:
         n_dangling = (
             und.select(F.col("dst").alias("node"))
@@ -91,7 +91,7 @@ def _edges_degrees(
             und.unpersist()
             nd.unpersist()
             raise ValueError(
-                f"{op}: {n_dangling} dangling node(s) (in-edges but no "
+                f"pagerank: {n_dangling} dangling node(s) (in-edges but no "
                 "out-edges) — this integer variant omits the dangling-mass "
                 "term; add self-loops / reverse edges, or drop the sinks"
             )
@@ -152,7 +152,7 @@ def pagerank(
     variant deliberately omits) — ENFORCED: a dst with no out-edges
     raises ``ValueError`` rather than silently leaking rank mass
     (``check_dangling=False`` skips the one extra job when the caller
-    guarantees the precondition, e.g. ``cotransaction_edges``).
+    guarantees the precondition, e.g. ``cotransaction_edges_from_pairs``).
     Multi-edges count as parallel edges (dedup upstream if unwanted).
 
     Update rule, all in integer units (``r`` starts at ``MASS // n``):
@@ -168,7 +168,7 @@ def pagerank(
     # (node, deg) is carried WITH the rank state — one table instead of
     # separate nodes/deg lookups, which would cost an extra join every
     # iteration.
-    und, nd, n = _edges_degrees(edges, check_dangling, "pagerank")
+    und, nd, n = _edges_degrees(edges, check_dangling)
     # Broadcast-state arm (r11, guide §2.4/§3.1): when the NODE COUNT —
     # exact, already computed for the base term — says the rank state is
     # broadcastable (~≤2M rows → tens of MB built relation, far under
@@ -261,79 +261,11 @@ def pagerank(
     )
 
 
-def pagerank_convergence(
-    edges: DataFrame,
-    iterations: int = 5,
-    damping_pct: int = 85,
-    check_dangling: bool = True,
-) -> list[tuple[int, int]]:
-    """Per-iteration convergence readout: ``(iteration, delta_mass)``
-    where ``delta_mass = Σ_nodes |r_t − r_{t−1}|`` in integer MASS
-    units — the diagnostic that lets a user pick ``iterations``
-    empirically instead of by folklore (delta decays geometrically at
-    roughly the damping factor per round; stop when it is below the
-    rank resolution you care about).
-
-    Runs the identical update rule as :func:`pagerank` but materializes
-    each round (the state is referenced twice — next round's join and
-    the delta — so the lazy single-DAG form would re-evaluate earlier
-    rounds exponentially). Diagnostic tool, not the serving path: run
-    it once per graph shape, then call ``pagerank`` with the chosen
-    iteration count. Enforces the same no-dangling-node precondition
-    as ``pagerank`` — deltas from the mass-leaking variant would
-    reflect leakage, not convergence, giving advice for a computation
-    ``pagerank`` itself refuses to run."""
-    und, nd, n = _edges_degrees(edges, check_dangling, "pagerank_convergence")
-    base = ((MASS // n) * (100 - damping_pct)) // 100
-    ranks = nd.withColumn("r", F.lit(MASS // n).cast("long")).localCheckpoint()
-    deltas: list[tuple[int, int]] = []
-    for it in range(1, iterations + 1):
-        shares = ranks.select(
-            F.col("node").alias("src"), F.expr("r div deg").alias("share")
-        )
-        contrib = (
-            und.join(shares, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").alias("m"))
-        )
-        nxt = nd.join(contrib, "node", "left").select(
-            "node",
-            "deg",
-            (
-                F.lit(base) + F.expr(f"({damping_pct} * coalesce(m, 0L)) div 100")
-            ).alias("r"),
-        ).localCheckpoint()
-        delta = (
-            nxt.withColumnRenamed("r", "r_new")
-            .join(ranks.select("node", "r"), "node")
-            .agg(F.sum(F.abs(F.col("r_new") - F.col("r"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        deltas.append((it, int(delta)))
-        ranks = nxt
-    und.unpersist()
-    nd.unpersist()
-    return deltas
-
-
-def cotransaction_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
-    """Undirected customer–supplier bipartite graph from the order
-    facts: an edge per DISTINCT (customer, supplier) pair that shares
-    an order, node ids typed as ``c<custkey>`` / ``s<suppkey>``.
-    Emitted in both directions (PageRank's undirected convention); the
-    distinct is one shuffle on the pair. When several queries walk the
-    same graph (and the Jaccard family collapses the same pairs), build
-    the distinct pair table once and feed
-    :func:`cotransaction_edges_from_pairs` — the registry routes all
-    four consumers through one cached collapse."""
-    return cotransaction_edges_from_pairs(cotransaction_pairs(orders, lineitem))
-
-
 def cotransaction_pairs(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
-    """THE distinct (custkey, suppkey) collapse — single definition so
-    the direct :func:`cotransaction_edges` path and the registry's
-    shared-cache consumers can never silently diverge (r6 review: the
-    collapse briefly existed twice)."""
+    """THE distinct (custkey, suppkey) collapse: the customers and
+    suppliers that share an order, one row per pair. One shuffle on the
+    pair; the registry caches it once per session for its graph and
+    similarity consumers."""
     return (
         orders.join(
             lineitem,
@@ -350,9 +282,11 @@ def cotransaction_pairs(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
 def cotransaction_edges_from_pairs(
     pairs: DataFrame, cust_col: str = "custkey", supp_col: str = "suppkey"
 ) -> DataFrame:
-    """Edge table from a PRECOMPUTED distinct (customer, supplier) pair
-    frame — the shareable half of :func:`cotransaction_edges`. The pair
-    collapse is the expensive part (a fact–fact join + distinct
+    """Undirected customer–supplier bipartite graph from a PRECOMPUTED
+    distinct (customer, supplier) pair frame (:func:`cotransaction_pairs`):
+    an edge per pair, node ids typed as ``c<custkey>`` / ``s<suppkey>``,
+    emitted in both directions (PageRank's undirected convention). The
+    pair collapse is the expensive part (a fact–fact join + distinct
     shuffle); pagerank, both BFS reach queries, and the item-Jaccard
     similarity all consume the identical collapse, so the registry
     caches it once per (session, sf) and each consumer pays only this

@@ -59,41 +59,6 @@ def unique_rule(col: str) -> Rule:
     return Rule(f"{col}_unique", None, kind="unique", col=col)
 
 
-def observe_expectations(
-    df: DataFrame, rules: list[Rule], name: str = "dq"
-):
-    """Attach the scalar rules to ``df`` as an ``Observation`` — the
-    inline form of ``check_expectations`` for when the pipeline is
-    going to scan the data ANYWAY (a write, an aggregation): the
-    violation counters ride along as accumulator-style metrics on that
-    same action, so data quality costs ZERO extra scans and zero extra
-    shuffles. ``check_expectations`` is the gate you run before a job;
-    this is the monitor you attach to the job itself — at 100 TB the
-    difference is a full corpus pass.
-
-    Returns ``(observed_df, observation)``: run any ONE action on
-    ``observed_df`` (or anything built on it), then read
-    ``observation.get`` → ``{"n_rows": ..., <rule>: ...}``. Only
-    scalar rules are accepted — unique/FK rules need their own
-    aggregation shape and belong to the gate form (loud error here,
-    not silent omission).
-    """
-    from pyspark.sql import Observation
-
-    non_scalar = [r.name for r in rules if r.kind != "scalar"]
-    if non_scalar:
-        raise ValueError(
-            "observe_expectations takes scalar rules only (got "
-            f"{non_scalar}); run unique/FK rules via check_expectations"
-        )
-    obs = Observation(name)
-    metrics = [F.count(F.lit(1)).cast("long").alias("n_rows")] + [
-        F.sum(F.when(r.violation, 1).otherwise(0)).cast("long").alias(r.name)
-        for r in rules
-    ]
-    return df.observe(obs, *metrics), obs
-
-
 def check_expectations(
     df: DataFrame,
     rules: list[Rule],

@@ -160,8 +160,7 @@ def filtered_topk(
     pitfall this operator exists to avoid. At scale the filter also
     reaches the parquet scan (PushedFilters on the label column), so
     the kernel only ever reads the matching slice — with a
-    label-partitioned layout (sources/partitioned.py) it prunes whole
-    directories.
+    label-partitioned layout it prunes whole directories.
 
     Queries keep their own vectors regardless of their label; a query
     that itself carries ``label`` is excluded from its candidates

@@ -2,12 +2,11 @@
 
 The 100 TB pattern these enable: compute per-partition (here per-day)
 sketch PARTIALS once at ingest, persist them as small binary columns,
-and answer any later rollup — uniques over an arbitrary date range,
-quantiles over a month, set overlap between segments — by MERGING
-sketches (`hll_union_agg`, `kll_sketch_merge_*`, theta unions) without
-ever rescanning the raw data. An exact `count(DISTINCT ...)` over a new
-date range re-shuffles the corpus every time; the sketch rollup touches
-only bytes proportional to days × sketch size (~KBs).
+and answer any later rollup — uniques over an arbitrary date range —
+by MERGING sketches (`hll_union_agg`) without ever rescanning the raw
+data. An exact `count(DISTINCT ...)` over a new date range re-shuffles
+the corpus every time; the sketch rollup touches only bytes
+proportional to days × sketch size (~KBs).
 
 Estimates from the DataSketches members are engine-internal (binary
 format), so their registry query is rows-only; accuracy vs the exact
@@ -25,13 +24,11 @@ from pyspark.sql import functions as F
 
 
 def daily_user_sketches(events: DataFrame) -> DataFrame:
-    """Per-day sketch partials: an HLL sketch of the day's user ids and
-    a KLL quantile sketch of the day's values — the small mergeable
-    state a streaming ingest would persist alongside (or instead of)
-    raw events for interactive rollups."""
+    """Per-day sketch partials: an HLL sketch of the day's user ids —
+    the small mergeable state a streaming ingest would persist alongside
+    (or instead of) raw events for interactive rollups."""
     return events.groupBy(F.to_date("ts").alias("day")).agg(
         F.hll_sketch_agg("user_id").alias("users_hll"),
-        F.kll_sketch_agg_double("value").alias("value_kll"),
         F.count(F.lit(1)).alias("n_events"),
     )
 
@@ -65,55 +62,6 @@ def rollup_unique_users(daily: DataFrame) -> DataFrame:
         weekly.unionByName(total)
         .repartition(1)
         .sortWithinPartitions("week")
-    )
-
-
-def value_quantiles_from_sketches(daily: DataFrame, probs=(0.5, 0.9, 0.99)) -> DataFrame:
-    """Merge the per-day KLL partials and read quantiles of the WHOLE
-    value distribution from the merged sketch — the percentile dashboard
-    over any date range without touching raw events."""
-    # kll_sketch_merge_double is a BINARY scalar (unlike hll_union_agg):
-    # fold the per-day sketches with aggregate() over a collected list —
-    # bounded by the number of DAYS (partial count), not data-sized.
-    merged = daily.agg(
-        F.collect_list("value_kll").alias("ks"),
-        F.sum("n_events").alias("n_events"),
-    ).select(
-        F.expr(
-            "aggregate(slice(ks, 2, size(ks) - 1), ks[1],"
-            " (a, x) -> kll_sketch_merge_double(a, x))"
-        ).alias("kll"),
-        "n_events",
-    )
-    cols = [
-        F.round(
-            F.kll_sketch_get_quantile_double(F.col("kll"), F.lit(p)), 2
-        ).alias(f"p{int(p * 100)}")
-        for p in probs
-    ]
-    return merged.select("n_events", *cols)
-
-
-def segment_overlap_theta(events: DataFrame, type_a: str, type_b: str) -> DataFrame:
-    """Distinct-user overlap between two behavioral segments via theta
-    sketches: |A|, |B|, and |A ∩ B| estimates from per-segment sketches
-    (theta supports set intersection, which HLL cannot) — the audience-
-    overlap question every segmentation system answers at scale."""
-    sk = lambda t: F.theta_sketch_agg(
-        F.when(F.col("event_type") == t, F.col("user_id"))
-    )
-    both = events.agg(
-        sk(type_a).alias("sk_a"),
-        sk(type_b).alias("sk_b"),
-    )
-    return both.select(
-        F.lit(type_a).alias("segment_a"),
-        F.lit(type_b).alias("segment_b"),
-        F.theta_sketch_estimate(F.col("sk_a")).alias("est_a"),
-        F.theta_sketch_estimate(F.col("sk_b")).alias("est_b"),
-        F.theta_sketch_estimate(
-            F.expr("theta_intersection(sk_a, sk_b)")
-        ).alias("est_overlap"),
     )
 
 

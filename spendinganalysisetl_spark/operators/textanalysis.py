@@ -174,8 +174,8 @@ def repetition_features(documents: DataFrame) -> DataFrame:
     their own projection step, then every consumer reads the attribute.
     Higher-order functions (``transform``/``array_distinct``) are
     CodegenFallback expressions — whole-stage codegen does NOT
-    common-subexpression-eliminate them, so referencing the inline
-    ``word_trigrams(text)`` tree in three output columns evaluated the
+    common-subexpression-eliminate them, so referencing one inline
+    tokenize+trigram expression in three output columns evaluated the
     whole tokenize+shingle pipeline per reference (r6 judge: 10.9× the
     oracle at sf1; together with the ``slice``→``element_at`` gram swap
     in :func:`trigrams_of_tokens` this brought sf1 to oracle parity).
@@ -497,8 +497,7 @@ def gopher_quality_flags(
     the whole report is exact int64 — no float surface, no rounding
     fence, bit-identical on any engine and under any row order. One
     projection over one scan; flags are scan-side, so at 100 TB this
-    gate fuses into whatever pass reads the text anyway (or rides an
-    Observation, the observe_expectations pattern)."""
+    gate fuses into whatever pass reads the text anyway."""
     lower = F.lower(F.col("text"))
     toks = ws_tokens(F.col("text"))
     n_words = F.size(toks).cast("long")

@@ -1,90 +1,67 @@
-"""Time-series operators: dynamic pivot, pct-change (lag), absent-as-zero
-mean — the reference's most distinctive semantics (SURVEY.md §2.4 A9/A12,
-§2.5 W1-W3; /root/reference/transformer.py:194-226).
+"""Time-series operators: dense monthly matrix, pct-change (lag),
+absent-as-zero mean — the reference's most distinctive semantics
+(SURVEY.md §2.4 A9/A12, §2.5 W1-W3; /root/reference/transformer.py:194-226).
 
 The reference pivots uploads into a pandas date×name matrix, fillna(0),
 then takes per-column ``pct_change().iloc[-1]`` and ``mean()``. Here the
-same computations stay in LONG form (period, name, amount) — a pivot to
+same computations stay in LONG form (period, name, dmc) — a pivot to
 wide format would bake the distinct-name discovery into the schema and
 defeat partial aggregation; long form keeps everything a hash-agg +
-window, shuffling once on the (small) name key space.
-
-``monthly_pivot`` still exposes the literal wide pivot (A12) because the
-reference's report shape is the matrix itself; at scale the pivot's
-column count equals the distinct-name cardinality, which for
-category/vendor dimensions is small by construction.
+window, shuffling once on the (small) name key space. Amounts are exact
+bigint decimicents (``dmc``, functions.scalars.decimicents), so every
+derived double is bit-identical to the DuckDB twins (registry
+``MONTHLY_CTE``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from spendinganalysisetl_spark.functions.scalars import (
-    pct_change_ref,
-    pct_change_safe,
-    round2,
-)
+from spendinganalysisetl_spark.functions.scalars import decimicents, pct_change_safe
 
 
-def period_name_amounts(sales: DataFrame, period_col: str = "order_date") -> DataFrame:
-    """Long-form monthly matrix input: (period, name, amount-sum) per
-    category. Missing (period, name) combinations are materialized as 0
-    to match the reference's fillna(0) (transformer.py:217-218) — a
-    cross join of the two *distinct* sides (both tiny relative to the
+def period_name_amounts(
+    facts: DataFrame, date_col: str, name_col: str, amount: Column
+) -> DataFrame:
+    """Zero-densified long-form monthly matrix ``(period, name, dmc)``:
+    the decimicent sum of ``amount`` per (month of ``date_col``,
+    ``name_col``), with every missing (period, name) cell materialized
+    as 0 to match the reference's fillna(0) (transformer.py:217-218) —
+    a cross join of the two *distinct* sides (both tiny relative to the
     fact) left-joined back to the aggregate."""
-    monthly = (
-        sales.groupBy(
-            F.date_format(F.date_trunc("month", F.col(period_col)), "yyyy-MM-dd").alias(
-                "period"
-            ),
-            F.col("category").alias("name"),
-        )
-        .agg(F.sum("amount").alias("amount"))
-    )
+    monthly = facts.groupBy(
+        F.date_format(F.date_trunc("month", date_col), "yyyy-MM-dd").alias("period"),
+        F.col(name_col).alias("name"),
+    ).agg(F.sum(decimicents(amount)).alias("dmc"))
     periods = monthly.select("period").distinct()
     names = monthly.select("name").distinct()
-    dense = periods.crossJoin(names)
+    # Explicit broadcast: distinct-aggregate outputs carry no size
+    # stats, so the planner would otherwise fall back to
+    # CartesianProduct (partition-wise cross product) for the
+    # densification grid — caught by the catalog-wide plan lint.
     return (
-        dense.join(monthly, ["period", "name"], "left")
-        .select("period", "name", F.coalesce("amount", F.lit(0.0)).alias("amount"))
+        periods.crossJoin(F.broadcast(names))
+        .join(F.broadcast(monthly), ["period", "name"], "left")
+        .select("period", "name", F.coalesce("dmc", F.lit(0)).alias("dmc"))
     )
 
 
-def monthly_pivot(sales: DataFrame) -> DataFrame:
-    """A12 literal form: rows=periods, cols=category names, vals=summed
-    amount, missing→0 (transformer.py:216-218). Spark's ``pivot`` does
-    the same dynamic distinct-value discovery as pandas column inference."""
-    return (
-        sales.groupBy(
-            F.date_format(F.date_trunc("month", "order_date"), "yyyy-MM-dd").alias("period")
-        )
-        .pivot("category")
-        .sum("amount")
-        .na.fill(0.0)
-        .repartition(1).sortWithinPartitions("period")
-    )
-
-
-def pct_change_last(dense: DataFrame, ref_compat: bool = False) -> DataFrame:
+def pct_change_last(dense: DataFrame) -> DataFrame:
     """W1+W2: per-name percent change of the most recent period vs the
-    one before it (transformer.py:221-222 ``pct_change().iloc[-1]``).
-
-    ref_compat=True reproduces the pandas quirk matrix (inf survives
-    fillna — see functions.scalars.pct_change_ref); default uses SQL
-    NULL-on-zero-divide semantics so the DuckDB oracle agrees.
+    one before it (transformer.py:221-222 ``pct_change().iloc[-1]``),
+    with SQL NULL-on-first/zero-prev semantics so the DuckDB oracle
+    agrees (the reference's ±inf quirk is ``monthly_pct_change_inf_ref``).
 
     Window is partitioned by name — no global ordering, shuffle only on
     the small name key space.
     """
     w = Window.partitionBy("name").orderBy("period")
-    prev = F.lag("amount").over(w)
-    pct = pct_change_ref(F.col("amount"), prev) if ref_compat else pct_change_safe(
-        F.col("amount"), prev
-    )
     wdesc = Window.partitionBy("name").orderBy(F.col("period").desc())
+    amt = F.col("dmc") / F.lit(10000.0)
+    prev_amt = F.lag("dmc").over(w) / F.lit(10000.0)
     return (
-        dense.withColumn("pct_change", round2(pct))
+        dense.withColumn("pct_change", pct_change_safe(amt, prev_amt))
         .withColumn("rn", F.row_number().over(wdesc))
         .filter(F.col("rn") == 1)
         .select("name", "period", "pct_change")
@@ -97,10 +74,15 @@ def mean_absent_as_zero(dense: DataFrame) -> DataFrame:
     period counts as 0 (transformer.py:217-218,225-226 — the zero-filled
     pivot's column mean; verified: value present once in 3 periods as
     5.0 → mean 1.67, not 5.0). ``dense`` is already zero-filled, so this
-    is a plain grouped avg."""
+    is a plain grouped mean; the exact bigint sum / count keeps the
+    double engine-identical."""
     return (
         dense.groupBy("name")
-        .agg(round2(F.avg("amount")).alias("avg_amount"))
+        .agg(
+            ((F.sum("dmc").cast("double") / F.count(F.lit(1))) / F.lit(10000.0)).alias(
+                "avg_amount"
+            )
+        )
         .repartition(1).sortWithinPartitions("name")
     )
 

@@ -374,8 +374,9 @@ def q_top5_vendors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- time-series family (SURVEY.md §2.4 A9/A12, §2.5 W1-W3) -----------------
 
 # Long-form monthly (period, name, decimicents) with zero-densification —
-# SQL twin of operators.timeseries.period_name_amounts. Exact bigint
-# amounts keep every derived double bit-identical across engines.
+# SQL twin of operators.timeseries.period_name_amounts (category dim).
+# Exact bigint amounts keep every derived double bit-identical across
+# engines.
 MONTHLY_CTE = """
 WITH monthly AS (
   SELECT strftime(date_trunc('month', o.o_orderdate), '%Y-%m-%d') AS period,
@@ -398,40 +399,17 @@ dense AS (
 def _dense_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from spendinganalysisetl_spark.functions.scalars import decimicents
+    from spendinganalysisetl_spark.functions.scalars import revenue
+    from spendinganalysisetl_spark.operators.timeseries import period_name_amounts
 
     def build() -> DataFrame:
         lineitem = load_table(spark, sf_dir, "lineitem")
         orders = load_table(spark, sf_dir, "orders")
         part = load_table(spark, sf_dir, "part")
-        monthly = (
-            lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
-            .groupBy(
-                F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM-dd").alias(
-                    "period"
-                ),
-                F.col("p_type").alias("name"),
-            )
-            .agg(
-                F.sum(
-                    decimicents(
-                        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-                    )
-                ).alias("dmc")
-            )
+        facts = lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey).join(
+            F.broadcast(part), lineitem.l_partkey == part.p_partkey
         )
-        periods = monthly.select("period").distinct()
-        names = monthly.select("name").distinct()
-        # Explicit broadcast: distinct-aggregate outputs carry no size
-        # stats, so the planner would otherwise fall back to
-        # CartesianProduct (partition-wise cross product) for the
-        # densification grid — caught by the catalog-wide plan lint.
-        return (
-            periods.crossJoin(F.broadcast(names))
-            .join(F.broadcast(monthly), ["period", "name"], "left")
-            .select("period", "name", F.coalesce("dmc", F.lit(0)).alias("dmc"))
-        )
+        return period_name_amounts(facts, "o_orderdate", "p_type", revenue())
 
     return shared(spark, sf_dir, "dense_monthly", build)
 
@@ -470,27 +448,11 @@ FROM (
 def q_monthly_pct_change_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1+W2: last period's month-over-month pct change per category
     (transformer.py:221-222 ``pct_change().iloc[-1]``), SQL NULL
-    semantics on zero/first (ref-compat inf variant is unit-tested in
-    tests/test_quirks.py, not oracle-checked — SURVEY.md W1 decision)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    semantics on zero/first (the ref-compat ±inf variant is
+    ``monthly_pct_change_inf_ref`` — SURVEY.md W1 decision)."""
+    from spendinganalysisetl_spark.operators.timeseries import pct_change_last
 
-    dense = _dense_monthly(spark, sf_dir)
-    w = Window.partitionBy("name").orderBy("period")
-    wdesc = Window.partitionBy("name").orderBy(F.col("period").desc())
-    amt = F.col("dmc") / F.lit(10000.0)
-    prev_amt = F.lag("dmc").over(w) / F.lit(10000.0)
-    pct = F.when(
-        F.lag("dmc").over(w).isNull() | (F.lag("dmc").over(w) == 0),
-        F.lit(None).cast("double"),
-    ).otherwise((amt - prev_amt) / prev_amt)
-    return (
-        dense.withColumn("pct_change", pct)
-        .withColumn("rn", F.row_number().over(wdesc))
-        .filter(F.col("rn") == 1)
-        .select("name", "period", "pct_change")
-        .repartition(1).sortWithinPartitions("name")
-    )
+    return pct_change_last(_dense_monthly(spark, sf_dir))
 
 
 @register(
@@ -504,20 +466,10 @@ FROM dense GROUP BY name ORDER BY name
 def q_monthly_avg_absent_as_zero(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: per-category mean over ALL periods, absent month = 0
     (transformer.py:217-226 — the zero-filled pivot's column mean; NOT
-    avg over present rows). Exact bigint sum / count keeps the double
-    engine-identical."""
-    from pyspark.sql import functions as F
+    avg over present rows)."""
+    from spendinganalysisetl_spark.operators.timeseries import mean_absent_as_zero
 
-    return (
-        _dense_monthly(spark, sf_dir)
-        .groupBy("name")
-        .agg(
-            ((F.sum("dmc").cast("double") / F.count(F.lit(1))) / F.lit(10000.0)).alias(
-                "avg_amount"
-            )
-        )
-        .repartition(1).sortWithinPartitions("name")
-    )
+    return mean_absent_as_zero(_dense_monthly(spark, sf_dir))
 
 
 # --- join family (SURVEY.md §2.3, §7 Phase 4) --------------------------------
@@ -4768,33 +4720,17 @@ def _dense_monthly_vendor(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the ±inf pct_change quirk needs to fire."""
     from pyspark.sql import functions as F
 
-    from spendinganalysisetl_spark.functions.scalars import decimicents, revenue
+    from spendinganalysisetl_spark.functions.scalars import revenue
+    from spendinganalysisetl_spark.operators.timeseries import period_name_amounts
 
     def build() -> DataFrame:
         lineitem = load_table(spark, sf_dir, "lineitem")
         orders = load_table(spark, sf_dir, "orders")
         supplier = load_table(spark, sf_dir, "supplier")
-        monthly = (
-            lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
-            .groupBy(
-                F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM-dd").alias(
-                    "period"
-                ),
-                F.col("s_name").alias("name"),
-            )
-            .agg(F.sum(decimicents(revenue())).alias("dmc"))
+        facts = lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey).join(
+            F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey
         )
-        periods = monthly.select("period").distinct()
-        names = monthly.select("name").distinct()
-        # Explicit broadcasts for the densification grid, as in
-        # _dense_monthly: distinct outputs carry no size stats and the
-        # planner would fall back to CartesianProduct otherwise.
-        return (
-            periods.crossJoin(F.broadcast(names))
-            .join(F.broadcast(monthly), ["period", "name"], "left")
-            .select("period", "name", F.coalesce("dmc", F.lit(0)).alias("dmc"))
-        )
+        return period_name_amounts(facts, "o_orderdate", "s_name", revenue())
 
     return shared(spark, sf_dir, "dense_monthly_vendor", build)
 
@@ -5431,7 +5367,7 @@ LIMIT {k}
 @register("pagerank_customer_supplier", _pagerank_oracle_sql())
 def q_pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer–supplier co-transaction graph
-    (operators/graph.py:pagerank over cotransaction_edges): top-20
+    (operators/graph.py:pagerank over cotransaction_edges_from_pairs): top-20
     nodes by rank after 5 damped iterations. Runs in fixed-point
     integer arithmetic (MASS = 1e12 units, floor-division shares) so
     every rank unit is order-independent and bit-reproducible — the
@@ -5905,7 +5841,7 @@ def q_similar_suppliers_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spendinganalysisetl_spark.operators.affinity import item_jaccard_pairs
 
     # The distinct (customer, supplier) collapse is the SAME
-    # intermediate cotransaction_edges derives the graph from — read it
+    # intermediate the pagerank/BFS graph is derived from — read it
     # from the shared cache instead of re-paying the fact–fact shuffle
     # (VERDICT r5: this query alone re-ran the join at 5× the oracle).
     baskets = _cs_pairs(spark, sf_dir).select(

@@ -166,6 +166,10 @@ class ReportServer:
                     return
                 try:
                     n = int(self.headers.get("Content-Length", "0"))
+                    if n < 0:
+                        # rfile.read(-1) would block until the client
+                        # closes the connection.
+                        raise ValueError("negative Content-Length")
                     req = json.loads(self.rfile.read(n) or b"{}")
                     # TypeError covers valid-JSON non-objects ('null',
                     # '[1]', '"x"') where subscripting isn't indexable.

@@ -2,12 +2,9 @@
 on a HIGH-cardinality column that is neither the partition key nor the
 sort key.
 
-Completes the data-skipping family:
-
-- ``sources.partitioned``  — directory pruning, LOW-cardinality equality
-- ``sources.sorted_layout`` — row-group zone maps, RANGE on the sort key
-- this module             — equality on any other column ("orders by
-  customer X" against a table partitioned by date and sorted by key)
+The lookup it serves: equality on a column the table is neither
+partitioned nor sorted by ("orders by customer X" against a table
+partitioned by date and sorted by key).
 
 A 100 TB fact table answers that lookup today by scanning every file.
 A per-file Bloom filter over the column (k hash bits in an m-bit
@@ -34,12 +31,12 @@ Scale shape: the build is scan → hash → explode×k → per-bucket
 caps shuffle volume at ≤ buckets·m positions per map task however many
 rows feed it. A probe BROADCASTS the hashed probe list against the
 bitset table and filters with an ``array_contains`` HOF — zero
-probe-side exchanges; the verified read opens only candidate files.
+probe-side exchanges.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spendinganalysisetl_spark.functions.text import hex_fold
@@ -181,35 +178,3 @@ def candidate_buckets(
         .select("probe", "bucket")
     )
 
-
-def point_read_with_bloom(
-    spark: SparkSession,
-    path: str,
-    value_col: str,
-    value,
-    k: int = K_HASHES,
-    m: int = M_BITS,
-    index: DataFrame | None = None,
-) -> DataFrame:
-    """Point lookup that opens ONLY the files the Bloom index can't rule
-    out. ``index`` is the physical-file index (``build_bloom_index``
-    with ``input_file_name()``); built on the fly when omitted — a real
-    deployment persists it next to the table and maintains it per
-    commit. Returns the matching rows; tests assert the scan's
-    ``inputFiles()`` is the candidate subset, not the full listing."""
-    full = spark.read.parquet(path)
-    if index is None:
-        index = build_bloom_index(
-            full.withColumn("_file", F.input_file_name()), "_file", value_col, k, m
-        )
-    from spendinganalysisetl_spark.catalog import local_table
-
-    probe = local_table(
-        spark, [(value,)], full.select(value_col).schema
-    ).withColumnRenamed(value_col, "probe")
-    files = [
-        r["bucket"] for r in candidate_buckets(index, probe, k=k, m=m).collect()
-    ]
-    if not files:
-        return full.filter(F.lit(False))
-    return spark.read.parquet(*files).filter(F.col(value_col) == value)

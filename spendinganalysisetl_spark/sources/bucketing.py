@@ -22,7 +22,7 @@ the unbucketed join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -51,21 +51,3 @@ def write_bucketed(
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
 
-
-def cobucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> DataFrame:
-    """Join two co-bucketed tables on their bucket key.
-
-    With both sides bucketed identically on ``key``, Catalyst satisfies
-    the join's distribution requirement from storage — the physical plan
-    has no Exchange on either side (and with ``sortBy`` metadata, no
-    Sort either): scan → merge. This is the co-located join the brief's
-    scale checklist asks for.
-    """
-    return spark.table(left_table).join(spark.table(right_table), key)
-
-
-def plan_has_exchange(df: DataFrame) -> bool:
-    """True if the physical plan contains a shuffle (test helper)."""
-    return "Exchange" in df._jdf.queryExecution().executedPlan().toString()

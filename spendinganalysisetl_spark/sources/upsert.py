@@ -506,9 +506,9 @@ def scd2_apply(
     OPEN slice against the batch (closed history unions through
     untouched — it can never change):
 
-    - changed attributes → TWO rows via one posexploded pair (the
-      ``read_changes`` trick): the old version closed at the change's
-      effective time, and the new open version;
+    - changed attributes → TWO rows via one exploded pair: the old
+      version closed at the change's effective time, and the new open
+      version;
     - identical attributes → open row carries through (idempotent:
       re-applying a batch is a no-op);
     - unmatched change → new open row (first version of a new key);
@@ -578,138 +578,3 @@ def scd2_apply(
     )
     return out.unionByName(closed_rows.select(*cols, "effective_to", "is_current"))
 
-
-def read_changes(
-    spark: SparkSession,
-    path: str,
-    from_version: int | str,
-    to_version: int | str = -1,
-    key: tuple[str, ...] = KEY,
-    compare_cols: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """Change data feed between two sink snapshots (the Delta-CDF /
-    Iceberg-changelog pattern over this sink's commit log): one row per
-    changed KEY with ``_change_type`` ∈ insert | delete |
-    update_preimage | update_postimage — what a downstream incremental
-    consumer replays instead of re-reading the table.
-
-    Shape: both snapshots load from their retained ``v_*`` directories
-    (``read_reports(version=...)``) and diff through ONE full-outer
-    join on the key — the same single-join discipline as the MERGE legs
-    (no per-leg scans). An update is a matched key whose
-    ``compare_cols`` differ (default: every non-key, non-generated
-    column); update rows emit BOTH images, Delta-CDF style, via one
-    posexploded pair — no second join.
-
-    Scale: the join keys on the sink's primary key (uniform), both
-    sides are aggregate-/report-sized (this sink stores derived tables,
-    not raw facts), and snapshot retention is the only extra storage —
-    the feed is computed, never materialized. Generated per-commit
-    columns (``id``, ``created_at``) are excluded from the comparison
-    by default: a MERGE rewrite re-stamps them, which would turn every
-    carried row into a spurious update.
-    """
-    # Presence markers, not key-null probes: NULL-keyed rows would
-    # otherwise read as "absent" on their own side (same _s_present
-    # discipline as _merge_join).
-    pre = read_reports(spark, path, from_version).withColumn(
-        "_present", F.lit(1)
-    )
-    post = read_reports(spark, path, to_version).withColumn(
-        "_present", F.lit(1)
-    )
-    if compare_cols is None:
-        compare_cols = tuple(
-            c
-            for c in post.columns
-            if c not in key and c not in ("id", "created_at", "_present")
-        )
-    cond = None
-    for k in key:
-        c = pre[k].eqNullSafe(post[k])
-        cond = c if cond is None else cond & c
-    joined = pre.alias("pre").join(post.alias("post"), cond, "full_outer")
-    in_pre = F.col("pre._present").isNotNull()
-    in_post = F.col("post._present").isNotNull()
-    differs = None
-    for c in compare_cols:
-        d = ~F.col(f"pre.{c}").eqNullSafe(F.col(f"post.{c}"))
-        differs = d if differs is None else differs | d
-    img = lambda side: F.struct(
-        *[F.col(f"{side}.{c}").alias(c) for c in (*key, *compare_cols)]
-    )
-    # Unchanged rows filter out BEFORE the image-array projection, so
-    # the when-chain is exhaustive and needs no typed empty-array arm.
-    changes = (
-        joined.filter(~in_pre | ~in_post | differs)
-        .withColumn(
-            "_imgs",
-            F.when(~in_pre, F.array(F.struct(F.lit("insert").alias("t"), img("post").alias("r"))))
-            .when(~in_post, F.array(F.struct(F.lit("delete").alias("t"), img("pre").alias("r"))))
-            .otherwise(
-                F.array(
-                    F.struct(F.lit("update_preimage").alias("t"), img("pre").alias("r")),
-                    F.struct(F.lit("update_postimage").alias("t"), img("post").alias("r")),
-                )
-            ),
-        )
-        .select(F.explode("_imgs").alias("c"))
-        .select(
-            F.col("c.t").alias("_change_type"),
-            *[F.col(f"c.r.{c}").alias(c) for c in (*key, *compare_cols)],
-        )
-    )
-    return changes
-
-
-def rollback_sink(path: str, version: int | str) -> str:
-    """Roll the live table back to an earlier snapshot by committing it
-    again as the NEW current version (the Delta/Iceberg RESTORE move):
-    the pointer flips to the old version directory and the rollback is
-    itself a logged commit, so history stays append-only and a rollback
-    can be rolled back. ``version`` addresses ``history(path)`` like
-    ``read_reports``. Returns the version name now live. No data is
-    copied — the snapshot directory is simply re-pointed, so this is
-    O(1) regardless of table size."""
-    log = history(path)
-    if not log:
-        raise FileNotFoundError(f"{path} has no commit log (plain layout?)")
-    name = log[version]["version"] if isinstance(version, int) else version
-    if not os.path.isdir(os.path.join(path, name)):
-        raise FileNotFoundError(f"snapshot {name} was garbage-collected")
-    # retain high enough that the rollback target and the rolled-back-from
-    # version both survive their own GC pass.
-    live = sum(1 for rec in log if rec["live"])
-    _commit_version(path, name, retain=live, op="rollback")
-    return name
-
-
-def compact_sink(
-    spark: SparkSession, sink_path: str, target_files: int = 1, retain: int = 1
-) -> int:
-    """Small-files compaction: rewrite the live version into
-    ``target_files`` parquet files and commit it as a new version (same
-    pointer-flip protocol — readers never see a half-compacted table).
-    Returns the number of data files before compaction.
-
-    This is the table-maintenance pass every streaming/append sink needs:
-    a foreachBatch MERGE per micro-batch or repeated ``mode='append'``
-    writes accrete one small file per task per commit, and at 100 TB the
-    resulting file-listing + per-file open cost dominates scans.
-    ``coalesce`` (not ``repartition``) does the rewrite without a
-    shuffle — each output task reads a handful of input files and
-    streams them back out. At real scale ``target_files`` is sized from
-    ``bytes / 128MB``, and compaction of a partitioned sink runs
-    per-partition; content is byte-identical, so the compacted version
-    is also a valid time-travel snapshot."""
-    data_dir = _resolve_data_dir(sink_path)
-    n_before = sum(
-        1 for f in os.listdir(data_dir) if f.endswith(".parquet") or f.startswith("part-")
-    )
-    df = spark.read.parquet(data_dir)
-    version = f"v_{uuid.uuid4().hex}"
-    df.coalesce(target_files).write.mode("overwrite").parquet(
-        os.path.join(sink_path, version)
-    )
-    _commit_version(sink_path, version, retain=retain, op="compact")
-    return n_before

@@ -385,105 +385,6 @@ def run_foreach_batch_upsert(
     q.awaitTermination()
 
 
-def run_foreach_batch_fanout(
-    stream_df: DataFrame,
-    sink_path: str,
-    factory,
-    table: str,
-    key: tuple[str, ...],
-    compare_col: str,
-    checkpoint: str | None = None,
-) -> None:
-    """One stream, TWO sinks, one delivery contract: each micro-batch
-    MERGEs into the parquet lake sink AND the external warehouse inside
-    a single foreachBatch — the lambda-architecture tail (lake for
-    reprocessing, warehouse for serving) without running the pipeline
-    twice.
-
-    There is no cross-system transaction here and foreachBatch offers
-    none: a crash between the two writes leaves the warehouse one batch
-    behind the lake until the replay. Consistency comes from BOTH legs
-    being idempotent keyed MERGEs (compare-gated, exactly like their
-    standalone drains) — the replayed batch re-applies as a no-op on
-    whichever sink already has it, so the pair re-converges instead of
-    double-counting. That is the standard exactly-once-at-each-table
-    recipe for non-transactional multi-sink fan-out; systems needing
-    atomic cross-sink visibility stage through ONE transactional sink
-    and replicate from it instead.
-
-    The batch is cached for the two consumers — without it each leg
-    re-runs the upstream stateful aggregation's output projection.
-    """
-    from spendinganalysisetl_spark.sources.dbsink import upsert_to_db
-    from spendinganalysisetl_spark.sources.upsert import merge_reports
-
-    def _fanout(batch_df: DataFrame, epoch_id: int) -> None:
-        # Same skip rule as run_foreach_batch_upsert: both legs are
-        # idempotent keyed MERGEs, so an empty delta is a no-op on each.
-        if _skippable_empty_batch(batch_df, sink_path):
-            return
-        batch_df.persist()
-        try:
-            merge_reports(
-                batch_df.sparkSession,
-                sink_path,
-                batch_df,
-                compare_col=compare_col,
-                key=key,
-            )
-            upsert_to_db(
-                batch_df, factory, table, key=key, compare_col=compare_col
-            )
-        finally:
-            batch_df.unpersist()
-
-    ensure_scalable_state_store(stream_df.sparkSession)
-    writer = stream_df.writeStream.outputMode("update").foreachBatch(_fanout)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-
-
-def enriched_agg_stream(
-    events: DataFrame,
-    dim: DataFrame,
-    dim_key: str = "user_id",
-    group_col: str = "segment",
-    watermark: str = "10 minutes",
-    minutes: int = 5,
-) -> DataFrame:
-    """Stream-STATIC join → windowed aggregation: each micro-batch
-    equi-joins the event stream against a static dimension table
-    (broadcast — no state, no watermark needed for the join itself,
-    unlike stream-stream joins), then aggregates per (window, dim
-    attribute). The canonical enrichment topology: facts stream, the
-    dimension is a slowly-changing table re-read per batch.
-
-    100 TB notes: a broadcast dim join inside a stream costs the same
-    as in batch — the stream side never shuffles for it; only the
-    windowed aggregation pays an exchange, keyed (window, segment) and
-    bounded by the watermark. A dimension too big to broadcast becomes
-    a shuffle join per micro-batch — at that point pre-bucket the dim
-    on the join key or push the attribute upstream into the events.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .join(F.broadcast(dim), dim_key)
-        .groupBy(F.window("ts", f"{minutes} minutes"), group_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            group_col,
-            "n_events",
-            "total_value",
-        )
-    )
-
-
 def run_foreach_batch_to_db(
     stream_df: DataFrame,
     factory,

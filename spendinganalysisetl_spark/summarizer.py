@@ -1,12 +1,10 @@
-"""Pluggable report summarizer (SURVEY.md §2.10 U1).
+"""Report summarizer (SURVEY.md §2.10 U1).
 
 The reference attaches an LLM-generated ``fi_summary`` to each report
 via one Vertex AI call, falling back to a literal error string on any
 failure (/root/reference/transformer.py:246-278), gated by a PROD env
 flag (:14-20). The correctness path must be deterministic and offline,
-so the default here is a template renderer over the same report fields;
-an external-LLM implementation can be slotted in behind the same
-interface and env gate (never on the oracle-checked path).
+so the summary here is a template renderer over the same report fields.
 
 The summary is computed with built-in string expressions
 (format_string/concat_ws) on the one-row report DataFrame — in practice
@@ -15,17 +13,8 @@ driver-scale, but still a plan, not a collect.
 
 from __future__ import annotations
 
-import os
-from typing import Protocol
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-class Summarizer(Protocol):
-    def summarize(self, report: DataFrame) -> DataFrame:
-        """Return ``report`` with an appended ``fi_summary`` string column."""
-        ...
 
 
 def _template_expr() -> Column:
@@ -47,27 +36,10 @@ def _template_expr() -> Column:
 
 
 class TemplateSummarizer:
-    """Deterministic default: renders the reference's prompt fields
+    """Deterministic summary: renders the reference's prompt fields
     (transformer.py:250-266 enumerates them) into one sentence."""
 
     def summarize(self, report: DataFrame) -> DataFrame:
+        """Return ``report`` with an appended ``fi_summary`` string column."""
         return report.withColumn("fi_summary", _template_expr())
 
-
-class ExternalLLMSummarizer:
-    """Parity slot for the reference's Vertex AI call (transformer.py:
-    272-277): requires an external client, so in this offline build it
-    reproduces only the reference's FAILURE semantics — the literal
-    fallback string the reference attaches when the call errors."""
-
-    FALLBACK = "Error generating financial summary with AI."
-
-    def summarize(self, report: DataFrame) -> DataFrame:
-        return report.withColumn("fi_summary", F.lit(self.FALLBACK))
-
-
-def get_summarizer() -> Summarizer:
-    """Env-gated like the reference's PROD switch (transformer.py:14-20)."""
-    if os.environ.get("SPENDING_SUMMARIZER", "template") == "llm":
-        return ExternalLLMSummarizer()
-    return TemplateSummarizer()

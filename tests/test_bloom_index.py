@@ -1,14 +1,11 @@
-"""Bloom skipping index (sources/bloom_index.py): one-sided guarantee,
-pruning power, and the physical-file candidate-only read."""
+"""Bloom skipping index (sources/bloom_index.py): one-sided guarantee
+and pruning power."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from spendinganalysisetl_spark.sources.bloom_index import (
     build_bloom_index,
     candidate_buckets,
-    point_read_with_bloom,
 )
 
 
@@ -50,26 +47,6 @@ def test_one_sided_even_when_saturated(spark):
         for r in candidate_buckets(idx, probes, k=4, m=64).collect()
     }
     assert {(0, 0), (49, 0), (50, 1), (199, 3)} <= cand
-
-
-def test_point_read_opens_candidate_files_only(spark, tmp_path):
-    path = str(tmp_path / "facts")
-    df = spark.range(0, 2000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("payload")
-    )
-    # hash-cluster on k: each key lives in exactly one of the 8 files
-    df.repartition(8, "k").write.mode("overwrite").parquet(path)
-    n_files = len(spark.read.parquet(path).inputFiles())
-    assert n_files == 8
-
-    got = point_read_with_bloom(spark, path, "k", 1234)
-    assert [r["payload"] for r in got.collect()] == [3702]
-    opened = got.inputFiles()
-    assert 0 < len(opened) < n_files  # pruned scan, not a full one
-
-    # absent key: no candidate files, empty result
-    miss = point_read_with_bloom(spark, path, "k", 10**9)
-    assert miss.count() == 0
 
 
 def test_bitset_path_matches_row_path(spark):

@@ -12,11 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from spendinganalysisetl_spark.catalog import load_table
-from spendinganalysisetl_spark.sources.bucketing import (
-    cobucketed_join,
-    plan_has_exchange,
-    write_bucketed,
-)
+from spendinganalysisetl_spark.plans import node_counts
+from spendinganalysisetl_spark.sources.bucketing import write_bucketed
 
 
 @pytest.fixture(scope="module")
@@ -45,16 +42,16 @@ def test_cobucketed_join_no_shuffle_and_equal(spark, sf_dir, bucket_dir):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = cobucketed_join(spark, "orders_b", "lineitem_b", "o_orderkey")
+        joined = spark.table("orders_b").join(spark.table("lineitem_b"), "o_orderkey")
         agg = joined.groupBy("o_orderpriority").agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("l_quantity"), 2).alias("qty"),
         )
         # The join itself must not shuffle — bucket metadata satisfies
         # the distribution requirement from storage.
-        assert not plan_has_exchange(
-            cobucketed_join(spark, "orders_b", "lineitem_b", "o_orderkey")
-        ), "co-bucketed join should plan with zero Exchange nodes"
+        assert node_counts(joined, "Exchange") == {"Exchange": 0}, (
+            "co-bucketed join should plan with zero Exchange nodes"
+        )
 
         expected = (
             orders.join(
@@ -81,11 +78,6 @@ def test_band_index_bucketed_probe(spark, tmp_path):
     per-batch shape incremental_near_dup documents (the index paid its
     shuffle once, at write)."""
     from pyspark.sql import functions as F
-
-    from spendinganalysisetl_spark.sources.bucketing import (
-        plan_has_exchange,
-        write_bucketed,
-    )
 
     # a toy band table: (doc_id, band, band_key) — band_key the join key
     bands = spark.createDataFrame(

@@ -174,30 +174,6 @@ def test_cache_swap_releases_only_on_graph_change(spark):
     assert not (lvl.useMemory or lvl.useDisk)
 
 
-def test_pagerank_convergence_rejects_dangling_nodes(spark):
-    # the diagnostic must refuse the same graphs pagerank refuses —
-    # deltas from the mass-leaking variant would measure leakage,
-    # not convergence
-    from spendinganalysisetl_spark.operators.graph import pagerank_convergence
-
-    df = spark.createDataFrame([("a", "b"), ("c", "a")], ["src", "dst"])
-    with pytest.raises(ValueError, match="dangling"):
-        pagerank_convergence(df, iterations=2)
-
-
-def test_pagerank_convergence_delta_decays(spark):
-    from spendinganalysisetl_spark.operators.graph import pagerank_convergence
-
-    deltas = pagerank_convergence(_edges_df(spark), iterations=5)
-    assert [it for it, _ in deltas] == [1, 2, 3, 4, 5]
-    # |r_t - r_{t-1}| decays (geometric ~damping per round on this
-    # irregular graph); strictly monotone after the first step
-    vals = [d for _, d in deltas]
-    assert all(a > b for a, b in zip(vals, vals[1:])), vals
-    # and it converges well below the starting displacement
-    assert vals[-1] < vals[0] // 10
-
-
 def _path_edges(spark, chain):
     rows = []
     for a, b in zip(chain, chain[1:]):

@@ -255,64 +255,6 @@ def test_scd2_laws(spark, batches):
     ) == sorted(rows)
 
 
-_MERGE_ROWS = _st.lists(
-    _st.tuples(
-        _st.integers(min_value=1, max_value=6),   # month (key)
-        _st.integers(min_value=0, max_value=30),  # count
-    ),
-    min_size=1,
-    max_size=6,
-)
-
-
-@_settings(max_examples=5, deadline=None, suppress_health_check=[_HC.too_slow])
-@_given(base=_MERGE_ROWS, batch=_MERGE_ROWS)
-def test_change_feed_reconstruction_law(spark, tmp_path_factory, base, batch):
-    """For ANY base table and merge batch: applying the change feed to
-    the pre-snapshot reconstructs the post-snapshot exactly — delete
-    the delete/update_preimage keys, add the insert/update_postimage
-    rows. (The CDF contract that lets a downstream consumer replay
-    changes instead of re-reading the table.)"""
-    from spendinganalysisetl_spark.sources.upsert import (
-        merge_reports,
-        read_changes,
-        read_reports,
-        write_reports,
-    )
-
-    sink = str(tmp_path_factory.mktemp("cdf") / "sink")
-    mk = lambda rows: spark.createDataFrame(
-        [
-            (f"2024-{m:02d}-01", f"2024-{m:02d}-28", n, float(n))
-            for m, n in {m: n for m, n in rows}.items()
-        ],
-        "begin_date string, end_date string, total_transactions long, "
-        "total_spent double",
-    )
-    write_reports(mk(base), sink, mode="overwrite", retain=4)
-    merge_reports(spark, sink, mk(batch), retain=4)
-
-    key = ("begin_date", "end_date")
-    cmp_cols = ("total_transactions", "total_spent")
-    feed = read_changes(spark, sink, from_version=-2, to_version=-1, key=key)
-    pre = {
-        tuple(r[k] for k in key): tuple(r[c] for c in cmp_cols)
-        for r in read_reports(spark, sink, version=-2).collect()
-    }
-    post = {
-        tuple(r[k] for k in key): tuple(r[c] for c in cmp_cols)
-        for r in read_reports(spark, sink, version=-1).collect()
-    }
-    replayed = dict(pre)
-    for r in feed.collect():
-        kk = tuple(r[k] for k in key)
-        if r["_change_type"] in ("delete", "update_preimage"):
-            assert replayed.pop(kk, None) is not None, "feed removes a present key"
-        if r["_change_type"] in ("insert", "update_postimage"):
-            replayed[kk] = tuple(r[c] for c in cmp_cols)
-    assert replayed == post, "pre + feed must reconstruct post"
-
-
 @given(
     t_rows=st.lists(
         st.tuples(KEYS, st.integers(1, 50), st.integers(0, 999)),

@@ -77,42 +77,3 @@ def test_all_pass_and_single_scan(spark):
     rep = plan_report(out)
     assert rep["cartesian"] == 0 and rep["python_row_udfs"] == 0
 
-
-def test_observe_expectations_inline_metrics(spark):
-    """The Observation form: DQ counters ride along with the action the
-    pipeline was already running — values must equal the gate form's,
-    with no second job."""
-    from spendinganalysisetl_spark.operators.quality import observe_expectations
-
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, -5.0), (3, None), (4, 10.0)],
-        "id long, amount double",
-    )
-    rules = [range_rule("amount", 0, 100), not_null_rule("amount")]
-    observed, obs = observe_expectations(df, rules)
-    # The pipeline's OWN action (here: a downstream aggregate) triggers
-    # metric collection — no separate DQ pass.
-    downstream = observed.groupBy().sum("amount").collect()
-    assert downstream[0][0] == 15.0
-    got = obs.get
-    assert got["n_rows"] == 4
-    assert got["amount_between_0_100"] == 2  # -5 and the NULL
-    assert got["amount_not_null"] == 1
-    # parity with the gate form on the same rules
-    gate = {
-        r["rule"]: r["n_violations"]
-        for r in check_expectations(df, rules).collect()
-    }
-    assert gate["amount_between_0_100"] == got["amount_between_0_100"]
-    assert gate["amount_not_null"] == got["amount_not_null"]
-
-
-def test_observe_expectations_rejects_non_scalar(spark):
-    from spendinganalysisetl_spark.operators.quality import observe_expectations
-
-    df = spark.createDataFrame([(1,)], "id long")
-    try:
-        observe_expectations(df, [unique_rule("id")])
-        raise AssertionError("expected ValueError for unique rule")
-    except ValueError as e:
-        assert "scalar" in str(e)

@@ -57,7 +57,8 @@ def test_bottom5_is_reference_top5(spark):
 
 def test_absent_as_zero_mean(spark):
     """FIXTURES.md §C.3: value present once in 3 periods as 5.0 → mean
-    5/3 ≈ 1.67, not 5.0 (transformer.py:217-226)."""
+    5/3 ≈ 1.67, not 5.0 (transformer.py:217-226). Runs the catalog's
+    own densify + mean (``monthly_avg_absent_as_zero``)."""
     from spendinganalysisetl_spark.operators.timeseries import (
         mean_absent_as_zero,
         period_name_amounts,
@@ -71,9 +72,11 @@ def test_absent_as_zero_mean(spark):
     sales = spark.createDataFrame(
         rows, "order_date string, category string, order_key string, amount double"
     ).withColumn("order_date", F.to_date("order_date"))
-    dense = period_name_amounts(sales)
+    dense = period_name_amounts(sales, "order_date", "category", F.col("amount"))
+    assert dense.count() == 6, "3 periods x 2 names, absent cells as 0"
     means = {r["name"]: r["avg_amount"] for r in mean_absent_as_zero(dense).collect()}
     assert means["A"] == pytest.approx(5.0 / 3, abs=0.01)
+    assert means["B"] == pytest.approx(1.0, abs=0.01)
 
 
 def test_round_then_sum(spark):
@@ -110,14 +113,16 @@ def test_missing_dates_dropped(spark):
 
 
 def test_pct_change_last_operator_direct(spark):
-    """Call the OPERATOR (not the registry's inlined twin): last-period
-    pct change per name over a dense matrix, W1+W2 semantics."""
+    """The catalog's own operator (``monthly_pct_change_last``): last-
+    period pct change per name over a dense decimicent matrix, W1+W2
+    semantics — a zero previous period is NULL, not inf."""
     from spendinganalysisetl_spark.operators.timeseries import pct_change_last
 
     dense = spark.createDataFrame(
-        [("2024-01-01", "a", 10.0), ("2024-02-01", "a", 15.0),
-         ("2024-01-01", "b", 4.0), ("2024-02-01", "b", 2.0)],
-        "period string, name string, amount double",
+        [("2024-01-01", "a", 100000), ("2024-02-01", "a", 150000),
+         ("2024-01-01", "b", 40000), ("2024-02-01", "b", 20000),
+         ("2024-01-01", "c", 0), ("2024-02-01", "c", 30000)],
+        "period string, name string, dmc long",
     )
     got = {r["name"]: r["pct_change"] for r in pct_change_last(dense).collect()}
-    assert got == {"a": 0.5, "b": -0.5}
+    assert got == {"a": 0.5, "b": -0.5, "c": None}

@@ -85,6 +85,27 @@ def test_endpoints_over_real_http(spark, sink):
         srv.stop()
 
 
+@pytest.mark.parametrize("length", ["-1", "abc"])
+def test_summary_rejects_bad_content_length(spark, sink, length):
+    """A malformed Content-Length gets a 400 at once; a negative one
+    used to make the handler read until the client hung up."""
+    import socket
+    from urllib.parse import urlsplit
+
+    srv = serve_reports(spark, sink)
+    try:
+        url = urlsplit(srv.base_url)
+        with socket.create_connection((url.hostname, url.port), timeout=10) as s:
+            s.sendall(
+                b"POST /dates/summary HTTP/1.1\r\nHost: x\r\n"
+                + f"Content-Length: {length}\r\n\r\n".encode()
+            )
+            status = s.makefile("rb").readline()
+        assert status.split()[1] == b"400", status
+    finally:
+        srv.stop()
+
+
 def test_summary_predicates_push_to_scan(spark, sink):
     """The serving query must be a keyed point read: both equality
     predicates appear as PushedFilters on the parquet scan, so a

@@ -1,6 +1,6 @@
 """Structured Streaming jobs (SURVEY.md §2.9): tumbling agg and dedup
 driven synchronously (AvailableNow over a parquet dir), batch-vs-stream
-equivalence, stateful running totals, and the foreachBatch upsert sink."""
+equivalence, and the foreachBatch upsert sink."""
 
 from __future__ import annotations
 
@@ -169,38 +169,6 @@ def test_stream_dedup(spark, events_dir):
     assert out["n"] == out["d"], "dropDuplicatesWithinWatermark must leave unique ids"
 
 
-def test_stateful_running_totals(spark, events_dir):
-    from spendinganalysisetl_spark.streaming.jobs import read_event_stream
-    from spendinganalysisetl_spark.streaming.stateful import running_user_totals
-
-    q = (
-        running_user_totals(read_event_stream(spark, events_dir))
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_totals")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # last emitted row per user == full batch aggregate
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in spark.sql(
-            """SELECT user_id, n_events, total_value FROM (
-                 SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-                 FROM user_totals) WHERE rn = 1"""
-        ).collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], r["t"])
-        for r in spark.read.parquet(f"{SF}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("t"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_foreach_batch_upsert_sink(spark, events_dir, tmp_path):
     from spendinganalysisetl_spark.sources.upsert import read_reports
     from spendinganalysisetl_spark.streaming.jobs import (
@@ -267,186 +235,69 @@ def test_foreach_batch_skips_empty_final_batch(spark, events_dir, tmp_path, monk
     assert read_reports(spark, sink).count() == want
 
 
-def test_foreach_batch_fanout_two_sinks(spark, events_dir, tmp_path):
-    """Multi-sink fan-out: one drain lands the tumbling aggregation in
-    BOTH the parquet sink and the DuckDB warehouse, each equal to the
-    batch aggregation; a full REPLAY (fresh checkpoint, same source)
-    re-applies as a no-op on both sinks — the idempotence that makes
-    the non-transactional pair re-converge after a mid-fanout crash."""
-    import duckdb
+def test_upsert_drain_replays_after_crash_past_sink_commit(
+    spark, events_dir, tmp_path, monkeypatch
+):
+    """Crash between the sink commit and the checkpoint commit: the
+    first micro-batch's MERGE lands, then the batch fails, so the drain
+    fails with that batch's offsets logged but not committed. A re-run
+    on the same checkpoint replays the batch against a sink that already
+    holds it; the compare-gated MERGE makes the replay a no-op, and the
+    sink equals the batch aggregation. A full replay of the source (no
+    checkpoint) leaves the sink unchanged too."""
+    from pyspark.errors import StreamingQueryException
 
+    import spendinganalysisetl_spark.sources.upsert as U
     from spendinganalysisetl_spark.catalog import load_table
     from spendinganalysisetl_spark.operators.events import tumbling_counts
     from spendinganalysisetl_spark.sources.upsert import read_reports
     from spendinganalysisetl_spark.streaming.jobs import (
         read_event_stream,
-        run_foreach_batch_fanout,
+        run_foreach_batch_upsert,
         tumbling_agg_stream,
     )
 
-    db = str(tmp_path / "serve.duckdb")
-
-    def _factory():
-        import duckdb
-
-        return duckdb.connect(db)
-
-    lake = str(tmp_path / "lake_sink")
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+    key = ("window_start", "event_type")
     agged = tumbling_agg_stream(read_event_stream(spark, events_dir)).select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n_events",
         "total_value",
     )
-    key = ("window_start", "event_type")
 
-    def snapshot():
-        lake_rows = {
-            (r["window_start"], r["event_type"]): (r["n_events"], round(r["total_value"], 2))
-            for r in read_reports(spark, lake)
-            .select("window_start", "event_type", "n_events", "total_value")
-            .collect()
+    def rows():
+        return {
+            (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
+            for r in read_reports(spark, sink).collect()
         }
-        with duckdb.connect(db) as con:
-            wh_rows = {
-                (ws, et): (n, round(tv, 2))
-                for ws, et, n, tv in con.execute(
-                    'SELECT window_start, event_type, n_events, total_value FROM "window_report"'
-                ).fetchall()
-            }
-        return lake_rows, wh_rows
 
-    run_foreach_batch_fanout(
-        agged, lake, _factory, "window_report", key=key, compare_col="n_events"
-    )
+    merge = U.merge_reports
+    crashed = []
+
+    def commit_then_crash(*a, **k):
+        merge(*a, **k)
+        if not crashed:
+            crashed.append(1)
+            raise RuntimeError("crash after the sink commit")
+
+    monkeypatch.setattr(U, "merge_reports", commit_then_crash)
+    with pytest.raises(StreamingQueryException, match="crash after the sink commit"):
+        run_foreach_batch_upsert(agged, sink, key=key, checkpoint=ckpt)
+    committed = rows()
+    assert committed, "the crashed batch's MERGE must have landed"
+
+    run_foreach_batch_upsert(agged, sink, key=key, checkpoint=ckpt)
     want = {
-        (r["window_start"], r["event_type"]): (r["n_events"], round(r["total_value"], 2))
+        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
         for r in tumbling_counts(load_table(spark, SF, "events"), 5).collect()
     }
-    lake1, wh1 = snapshot()
-    assert lake1 == want and wh1 == want and len(want) > 0
+    assert rows() == want == committed and len(want) > 0
 
-    # full replay (no checkpoint -> reprocesses the entire source):
-    # both MERGE legs must no-op, not double-count
-    run_foreach_batch_fanout(
-        agged, lake, _factory, "window_report", key=key, compare_col="n_events"
-    )
-    assert snapshot() == (lake1, wh1)
-
-
-def test_stream_static_join_matches_batch(spark, events_dir):
-    """Stream-static broadcast enrichment: the streamed (window, segment)
-    aggregation over events ⋈ static user-dimension must equal the batch
-    twin on finalized windows — the join itself carries no state, so the
-    only streaming semantics in play are the aggregation watermark's."""
-    import datetime
-
-    from spendinganalysisetl_spark.catalog import load_table
-    from spendinganalysisetl_spark.streaming.jobs import (
-        enriched_agg_stream,
-        read_event_stream,
-        run_to_memory,
-    )
-
-    batch = load_table(spark, SF, "events")
-    dim = batch.select("user_id").distinct().select(
-        "user_id", (F.col("user_id") % 3).cast("string").alias("segment")
-    )
-    run_to_memory(
-        enriched_agg_stream(read_event_stream(spark, events_dir), dim),
-        "enriched_out",
-    )
-    got = {
-        (r["window_start"].isoformat(), r["segment"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM enriched_out").collect()
-    }
-    want_rows = (
-        batch.join(F.broadcast(dim), "user_id")
-        .groupBy(F.window("ts", "5 minutes"), "segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("window.start").alias("ws"), "segment", "n_events", "total_value"
-        )
-        .collect()
-    )
-    max_ts = batch.agg(F.max("ts")).collect()[0][0]
-    cutoff = max_ts - datetime.timedelta(minutes=15)
-    finalized = {
-        (r["ws"].isoformat(), r["segment"]): (r["n_events"], r["total_value"])
-        for r in want_rows
-        if r["ws"] <= cutoff
-    }
-    assert got == finalized and len(finalized) > 0
-
-
-def test_transform_with_state_plan_construction(spark, events_dir):
-    """Without protobuf the tws stream can't START here, but the plan
-    must CONSTRUCT — schema contract identical to the old-API operator
-    (this is what breaks first on an API drift between Spark versions)."""
-    from spendinganalysisetl_spark.streaming.jobs import read_event_stream
-    from spendinganalysisetl_spark.streaming.stateful import (
-        OUTPUT_SCHEMA,
-        running_user_totals,
-        running_user_totals_tws,
-    )
-
-    src = read_event_stream(spark, events_dir)
-    tws = running_user_totals_tws(src)
-    old = running_user_totals(src)
-    assert tws.isStreaming and old.isStreaming
-    assert tws.schema == old.schema == OUTPUT_SCHEMA
-
-
-def test_transform_with_state_matches_apply_in_pandas(spark, events_dir):
-    """Spark 4.x transformWithStateInPandas must emit the same final
-    per-user totals as the applyInPandasWithState operator it succeeds
-    (and both equal the batch aggregate): the two arbitrary-state APIs
-    are semantic twins here, differing only in state ergonomics."""
-    import importlib.util
-
-    if importlib.util.find_spec("google") is None or importlib.util.find_spec(
-        "google.protobuf"
-    ) is None:
-        pytest.skip(
-            "transformWithState's Python state server needs google.protobuf "
-            "(absent in this container; see running_user_totals_tws docstring)"
-        )
-    from spendinganalysisetl_spark.streaming.jobs import read_event_stream
-    from spendinganalysisetl_spark.streaming.stateful import (
-        running_user_totals_tws,
-    )
-
-    q = (
-        running_user_totals_tws(read_event_stream(spark, events_dir))
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_totals_tws")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in spark.sql(
-            """SELECT user_id, n_events, total_value FROM (
-                 SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-                 FROM user_totals_tws) WHERE rn = 1"""
-        ).collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], r["t"])
-        for r in spark.read.parquet(f"{SF}/events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("t"),
-        )
-        .collect()
-    }
-    assert got == want and len(want) > 0
+    full = sorted(map(tuple, read_reports(spark, sink).collect()))
+    run_foreach_batch_upsert(agged, sink, key=key)
+    assert sorted(map(tuple, read_reports(spark, sink).collect())) == full
 
 
 def test_foreach_batch_to_db_sink(spark, events_dir, tmp_path):

@@ -277,53 +277,6 @@ def test_merge_additive_folds_partials(spark):
     assert out["2024-03-01"]["total_transactions"] == 7   # delta-only key
 
 
-def test_rollback_sink(spark, sink):
-    """RESTORE: rollback re-points the live table at an old snapshot via
-    a logged commit; a rollback can itself be rolled back."""
-    from spendinganalysisetl_spark.sources.upsert import history, rollback_sink
-
-    write_reports(
-        _batch(spark, [("2024-01-01", "2024-01-31", 10, 100.0)]),
-        sink,
-        mode="overwrite",
-        retain=2,
-    )
-    merge_reports(
-        spark, sink, _batch(spark, [("2024-01-01", "2024-01-31", 20, 20.0)]), retain=2
-    )
-    assert read_reports(spark, sink).collect()[0]["total_transactions"] == 20
-    rollback_sink(sink, 0)
-    assert read_reports(spark, sink).collect()[0]["total_transactions"] == 10
-    log = history(sink)
-    assert log[-1]["op"] == "rollback"
-    assert log[-1]["version"] == log[0]["version"]
-    # roll forward again (rollback of the rollback)
-    rollback_sink(sink, 1)
-    assert read_reports(spark, sink).collect()[0]["total_transactions"] == 20
-
-
-def test_compact_sink(spark, sink):
-    """Compaction rewrites the live version into target_files files via
-    a new commit; content identical, history records op='compact'."""
-    import os
-
-    from spendinganalysisetl_spark.sources.upsert import compact_sink, history
-
-    df = _batch(
-        spark, [(f"2024-{m:02d}-01", f"2024-{m:02d}-28", m, float(m)) for m in range(1, 13)]
-    ).repartition(8)
-    write_reports(df, sink, mode="overwrite")
-    before = read_reports(spark, sink).orderBy("begin_date").collect()
-    n_before = compact_sink(spark, sink, target_files=1)
-    assert n_before >= 2
-    after = read_reports(spark, sink).orderBy("begin_date").collect()
-    assert [r["begin_date"] for r in after] == [r["begin_date"] for r in before]
-    data_dir = os.path.join(sink, history(sink)[-1]["version"])
-    files = [f for f in os.listdir(data_dir) if f.startswith("part-")]
-    assert len(files) == 1
-    assert history(sink)[-1]["op"] == "compact"
-
-
 def test_gc_keeps_unlogged_pointer_target(spark, sink):
     """Crash-window guarantee: if a previous commit flipped the pointer
     but crashed before appending to the log, the next commit must still
@@ -356,85 +309,32 @@ def test_gc_keeps_unlogged_pointer_target(spark, sink):
     assert read_reports(spark, sink).collect()[0]["total_transactions"] == 30
 
 
-def test_compact_migrates_plain_layout(spark, sink):
-    """Compacting a plain-layout sink (append-mode writes, no pointer)
-    migrates it to the versioned layout and sweeps the now-unreachable
-    top-level data files."""
+def test_merge_migrates_plain_layout(spark, sink):
+    """The first MERGE into a plain-layout sink (append-mode writes, no
+    pointer) migrates it to the versioned layout and sweeps the
+    now-unreachable top-level data files, keeping every row."""
     import os
 
-    from spendinganalysisetl_spark.sources.upsert import compact_sink, history
+    from spendinganalysisetl_spark.sources.upsert import history
 
     df = _batch(
         spark, [(f"2024-{m:02d}-01", f"2024-{m:02d}-28", m, float(m)) for m in range(1, 7)]
     ).repartition(4)
     write_reports(df, sink, mode="append")  # plain layout: files at top level
     assert not os.path.isfile(os.path.join(sink, "_CURRENT"))
+    assert any(f.startswith("part-") for f in os.listdir(sink))
     before = {r["begin_date"] for r in read_reports(spark, sink).collect()}
 
-    compact_sink(spark, sink, target_files=1)
+    merge_reports(
+        spark, sink, _batch(spark, [("2024-07-01", "2024-07-28", 7, 7.0)])
+    )
     assert os.path.isfile(os.path.join(sink, "_CURRENT"))
     after = {r["begin_date"] for r in read_reports(spark, sink).collect()}
-    assert after == before
+    assert after == before | {"2024-07-01"}
     # pre-migration top-level part files are gone (only version dirs + metadata)
     top_parts = [f for f in os.listdir(sink) if f.startswith("part-")]
     assert top_parts == []
-    assert history(sink)[-1]["op"] == "compact"
-
-
-def test_read_changes_cdf(spark, sink):
-    """Change data feed between snapshots: one full-outer diff emits
-    insert / delete / update_preimage+postimage rows (Delta-CDF shape);
-    unchanged keys emit nothing; generated per-commit columns (id,
-    created_at) never count as changes."""
-    from pyspark.sql import functions as F
-
-    from spendinganalysisetl_spark.sources.upsert import read_changes
-
-    write_reports(
-        _batch(
-            spark,
-            [
-                ("2024-01-01", "2024-01-31", 10, 100.0),  # will update
-                ("2024-02-01", "2024-02-29", 20, 200.0),  # unchanged
-                ("2024-03-01", "2024-03-31", 30, 300.0),  # will delete
-            ],
-        ),
-        sink,
-        mode="overwrite",
-        retain=3,
-    )
-    merge_reports(
-        spark,
-        sink,
-        _batch(
-            spark,
-            [
-                ("2024-01-01", "2024-01-31", 15, 150.0),  # update (15 > 10)
-                ("2024-03-01", "2024-03-31", 0, 0.0),     # matched -> delete leg
-                ("2024-04-01", "2024-04-30", 40, 400.0),  # insert
-            ],
-        ),
-        delete_where=F.col("t.begin_date") == F.lit("2024-03-01"),
-        retain=3,
-    )
-
-    rows = read_changes(spark, sink, from_version=-2, to_version=-1).collect()
-    by_type = {}
-    for r in rows:
-        by_type.setdefault(r["_change_type"], []).append(r)
-    assert {t: len(v) for t, v in by_type.items()} == {
-        "insert": 1,
-        "delete": 1,
-        "update_preimage": 1,
-        "update_postimage": 1,
-    }
-    assert by_type["insert"][0]["begin_date"] == "2024-04-01"
-    assert by_type["delete"][0]["begin_date"] == "2024-03-01"
-    pre, post = by_type["update_preimage"][0], by_type["update_postimage"][0]
-    assert pre["begin_date"] == post["begin_date"] == "2024-01-01"
-    assert (pre["total_transactions"], post["total_transactions"]) == (10, 15)
-    # unchanged key (Feb) emitted nothing
-    assert all(r["begin_date"] != "2024-02-01" for r in rows)
+    assert history(sink)[-1]["op"] == "merge"
 
 
 def test_scd2_apply_versions_and_idempotence(spark):
