@@ -159,8 +159,14 @@ def main() -> None:
         # per-query .cache() tables) so the timed pass starts with clean
         # storage memory; JIT-compiled code survives this.
         spark.catalog.clearCache()
-        from spendinganalysisetl_spark import registry as _reg
+        from pyspark.sql import DataFrame
 
+        from spendinganalysisetl_spark import registry as _reg
+        from spendinganalysisetl_spark.catalog import release
+
+        for value in _reg._SHARED.values():
+            if isinstance(value, DataFrame):
+                release(value)
         _reg._SHARED.clear()
 
     # Timed pass: per query, best of REPS executions. Reporting the min

@@ -342,14 +342,11 @@ def main() -> None:
             # (e.g. base_sales) in its rep 1 — best-of-2 masks that, but
             # the probe shouldn't rely on the mask.
             from spendinganalysisetl_spark import registry as _reg
+            from spendinganalysisetl_spark.catalog import release
             from spendinganalysisetl_spark.operators import plancache as _pc
 
             for key in [k for k in _reg._SHARED if k[2] in shared_names]:
-                try:
-                    _reg._SHARED[key].unpersist()
-                except Exception:
-                    pass
-                del _reg._SHARED[key]
+                release(_reg._SHARED.pop(key))
             for op in plancache_ops:
                 entry = _pc._LAST_CACHES.pop(op, None)
                 if entry is None:

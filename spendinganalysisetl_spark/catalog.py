@@ -71,22 +71,39 @@ def session_memo(store: dict, spark: SparkSession, key: tuple, build):
       the context: ``spark.newSession()`` shares the context but owns its
       conf and temp-view catalog, so a frame made by another session
       would run under that session's conf. It is rebuilt for the caller,
-      and released first if it was persisted (``unpersist`` matches
-      cached plans by result, so a never-persisted frame is left alone
-      rather than uncaching someone else's identical plan). Any other
-      value is returned as it is.
+      and the blocks it pinned are released first (``release``). Any
+      other value is returned as it is.
     """
     live = _context_key(spark)
     hit = store.get((live, *key))
     if hit is not None:
         if not isinstance(hit, DataFrame) or hit.sparkSession is spark:
             return hit
-        if hit.is_cached:
-            hit.unpersist()
+        release(hit)
     for k in [k for k in store if k[0] != live]:
         del store[k]
     value = store[(live, *key)] = build()
     return value
+
+
+def release(df: DataFrame) -> None:
+    """Drop the blocks ``df`` pinned, by the kind of frame it is.
+
+    - Persisted: unpersisted only if this frame was persisted
+      (``unpersist`` matches cached plans by result, so a never-persisted
+      frame is left alone rather than uncaching someone else's identical
+      plan).
+    - Checkpointed: a ``LogicalRDD`` over a checkpointed RDD that no
+      other frame shares, so that RDD's blocks go. A local checkpoint
+      cannot be recomputed: a query still built over ``df`` fails after
+      this rather than re-deriving it.
+    """
+    if df.is_cached:
+        df.unpersist()
+        return
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+        plan.rdd().unpersist(False)
 
 
 def local_table(spark: SparkSession, rows, schema) -> DataFrame:

@@ -363,8 +363,8 @@ def unigram_cross_entropy(
             .agg(F.count(F.lit(1)).alias("c"))
         )
         dc = base.withColumn("c_w", F.sum("c").over(Window.partitionBy("w")))
-    # doc_terms (registry-shared, persisted — see doc_term_counts): the
-    # corpus token total then comes from the cached table (Σc — same
+    # doc_terms (registry-shared, materialized — see doc_term_counts): the
+    # corpus token total then comes from the shared table (Σc — same
     # value as the scan-side Σ size(tokens): NULL-text docs contribute
     # zero rows either way), so the family pays the tokenize once.
     # coalesce(…, 0): a NULL text row must contribute ZERO tokens to the
@@ -431,7 +431,7 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    # doc_terms: optionally the registry-shared persisted doc-term
+    # doc_terms: optionally the registry-shared doc-term
     # index (doc_term_counts) — the tokenize+explode scan, the family's
     # dominant cost, is then paid once per session, not per query.
     base = doc_terms if doc_terms is not None else doc_term_counts(documents)

@@ -568,7 +568,7 @@ def vocab_top_terms(
     on the k surviving rows. Ties break lexicographically.
     """
     if doc_terms is not None:
-        # Registry-shared persisted doc-term index (textanalysis.
+        # Registry-shared doc-term index (textanalysis.
         # doc_term_counts): the table is already distinct per
         # (doc_id, term), so n_occurrences = Σc and the document
         # frequency is a plain count — no second tokenize, no
@@ -1068,7 +1068,7 @@ def token_drift_psi(
 
     is_ref = F.col("doc_id") < split_id
     if doc_terms is not None:
-        # Registry-shared persisted doc-term index: per-side unigram
+        # Registry-shared doc-term index: per-side unigram
         # counts are a re-aggregation (Σc gated on the doc_id side) —
         # no corpus re-tokenize. Values identical to the explode path.
         vocab = doc_terms.groupBy(F.col("term").alias("token")).agg(

@@ -22,7 +22,7 @@ def physical_plan(df: DataFrame) -> str:
     appear only in the post-execution plan.
 
     An EXECUTED AdaptiveSparkPlan (isFinalPlan=true — e.g. the build
-    plan of a persisted shared intermediate that another query already
+    plan of a persisted intermediate that another query already
     ran) prints BOTH a ``== Final Plan ==`` and a duplicate
     ``== Initial Plan ==`` section, so naive substring counts (scans,
     exchanges) double depending on whether a sibling query executed the

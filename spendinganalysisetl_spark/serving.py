@@ -133,6 +133,11 @@ class ReportServer:
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
+            # Socket timeout (s): a client that stalls mid-request, such
+            # as a body shorter than its Content-Length, gets its
+            # connection closed instead of holding a handler thread.
+            timeout = 5
+
             def log_message(self, *a):  # silence per-request stderr noise
                 pass
 

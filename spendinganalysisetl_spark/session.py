@@ -13,6 +13,13 @@ Config rationale (SURVEY.md §4 "Config defaults for the port"):
 - Python workers fork from ``pyworker`` (no per-task re-read of
   ``pyspark.zip``) and get this package's parent directory on their
   ``PYTHONPATH``, so they import it whatever the JVM's cwd.
+- Python workers talk to the JVM over Unix domain sockets, not loopback
+  TCP, where each task waited ~40 ms for its first input batch (a
+  delayed ACK). The sockets live in one owner-only (0700) directory
+  under ``/tmp`` per process, removed at exit: a UDS worker skips the
+  auth-secret handshake, so the directory's permissions are the guard,
+  and Spark's default (``java.io.tmpdir``) can be too long for an
+  ``AF_UNIX`` path.
 
 The reference has no session concept (eager single-process pandas,
 /root/reference/transformer.py throughout); this factory is the port's
@@ -21,7 +28,11 @@ single entry to configured execution.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -29,6 +40,24 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # The directory that holds this package: Python workers import it by
 # reference (UDF closures over module functions), whatever the JVM's cwd.
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# PySpark names each socket ``<dir>/.<uuid4>.sock``: 43 bytes past the
+# directory, and an AF_UNIX path holds at most 107.
+_SOCKET_NAME_LEN = 43
+_AF_UNIX_PATH_MAX = 107
+
+
+@functools.cache
+def _socket_dir() -> str:
+    """This process's directory for the Python workers' Unix sockets:
+    made 0700 by ``mkdtemp``, removed at exit."""
+    path = tempfile.mkdtemp(prefix="spark-uds-", dir="/tmp")
+    atexit.register(shutil.rmtree, path, True)
+    if len(path) + _SOCKET_NAME_LEN > _AF_UNIX_PATH_MAX:
+        raise RuntimeError(
+            f"socket directory {path!r} is too long for an AF_UNIX path: "
+            f"{len(path)} + {_SOCKET_NAME_LEN} > {_AF_UNIX_PATH_MAX} bytes"
+        )
+    return path
 
 
 def get_spark(
@@ -54,6 +83,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.python.daemon.module", "spendinganalysisetl_spark.pyworker")
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _socket_dir())
         # Heap sized for the machine class (128 GiB box): at 8g a long
         # 100+-query session spends a measurable share of wall-clock in
         # GC — the full sf0.1 bench dropped 55.9s → 48.3s (stream drain

@@ -202,25 +202,46 @@ def test_session_memo_rebinds_frames_per_session(spark):
         b.unpersist()
 
 
+def _pinned_blocks(df) -> int:
+    """Partitions of ``df``'s checkpointed RDD held in the block manager
+    (0 once released)."""
+    rdd_id = df._jdf.queryExecution().logical().rdd().id()
+    infos = df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.numCachedPartitions() for i in infos if i.id() == rdd_id)
+
+
 def test_shared_rebinds_for_new_session(spark, sf_dir):
-    """registry.shared: one persisted build per (session, sf_dir, name);
-    a new session gets its own persisted frame and the old one is
-    released."""
-    from spendinganalysisetl_spark import registry
+    """registry.shared: one checkpointed build per (session, sf_dir,
+    name) with its blocks pinned; a new session gets its own frame and
+    the old one's blocks are released."""
+    from spendinganalysisetl_spark import catalog, registry
 
     name = "test_shared_rebind_probe"
     s2 = spark.newSession()
     try:
         a = registry.shared(spark, sf_dir, name, lambda: spark.range(5))
         assert registry.shared(spark, sf_dir, name, lambda: None) is a
-        assert a.is_cached
+        assert _pinned_blocks(a) > 0
         b = registry.shared(s2, sf_dir, name, lambda: s2.range(5))
         assert b is not a and b.sparkSession is s2
-        assert b.is_cached and not a.is_cached
+        assert _pinned_blocks(b) > 0 and _pinned_blocks(a) == 0
         assert b.count() == 5
     finally:
         for k in [k for k in registry._SHARED if k[2] == name]:
-            registry._SHARED.pop(k).unpersist()
+            catalog.release(registry._SHARED.pop(k))
+
+
+def test_shared_keys_on_absolute_sf_dir(spark, sf_dir):
+    """Two spellings of one directory share one build."""
+    from spendinganalysisetl_spark import catalog, registry
+
+    name = "test_shared_abspath_probe"
+    try:
+        a = registry.shared(spark, sf_dir, name, lambda: spark.range(5))
+        assert registry.shared(spark, sf_dir + "/", name, lambda: None) is a
+    finally:
+        for k in [k for k in registry._SHARED if k[2] == name]:
+            catalog.release(registry._SHARED.pop(k))
 
 
 def test_corpus_queries_build_from_session_state(spark, sf_dir):

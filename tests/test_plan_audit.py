@@ -100,7 +100,7 @@ def test_correlated_subquery_is_decorrelated(spark, sf_dir):
 
 
 def test_sales_cache_scans_in_parallel(spark, sf_dir):
-    """The shared sales intermediate persists spread across the default
+    """The shared sales intermediate is spread across the default
     parallelism (its plan is all broadcast joins over a 1-file scan, so
     without the explicit repartition the cache would hold 1-2 partitions
     and every report-family query would scan it nearly serially)."""
@@ -377,27 +377,49 @@ def test_initial_plan_sections_stripped():
 def test_tfidf_one_documents_scan(spark, sf_dir):
     """tfidf_top_terms with the catalog-statistics doc count (parquet
     footer num_rows, how the registry calls it) reads the session-shared
-    PERSISTED doc-term index exactly ONCE (r7 — the text family's one
-    corpus tokenize), and that index's build subtree is a single
-    documents FileScan: the count-star IDF-numerator branch is gone,
-    and df/len_d/top-k all chain as windows on the one flow (VERDICT
-    r5 ask #6 / r6 ask #2). Plan-string note: the cached build prints
-    under the InMemoryTableScan, so FileScan lines here are the CACHE's
-    plan, not extra corpus reads (and if the cache was already executed
-    by an earlier query, physical_plan strips the duplicate
-    ``== Initial Plan ==`` print — see test above)."""
+    doc-term index exactly ONCE (the text family's one corpus tokenize)
+    and never scans ``documents`` itself: the index is a checkpoint, so
+    the consumer plan stops at its ``Scan ExistingRDD``. The index's
+    own build is a single documents FileScan: the count-star
+    IDF-numerator branch is gone, and df/len_d/top-k all chain as
+    windows on the one flow."""
     import __spark_entry__ as entrymod
 
-    df = entrymod.queries()["tfidf_top_terms"](spark, sf_dir)
-    plan = _plan(df)
-    mem = [ln for ln in plan.splitlines() if "InMemoryTableScan" in ln]
-    assert len(mem) == 1, f"doc-term index read {len(mem)}x\n{plan[:2000]}"
-    build = [
-        ln
-        for ln in plan.splitlines()
-        if "FileScan" in ln and "documents" in ln
+    from spendinganalysisetl_spark.operators.textanalysis import doc_term_counts
+
+    plan = _plan(entrymod.queries()["tfidf_top_terms"](spark, sf_dir))
+    index = [ln for ln in plan.splitlines() if "Scan ExistingRDD" in ln]
+    assert len(index) == 1, f"doc-term index read {len(index)}x\n{plan[:2000]}"
+    assert not _file_scans(plan, ("documents",)), plan[:2000]
+    build = _plan(doc_term_counts(load_table(spark, sf_dir, "documents")))
+    n = len(_file_scans(build, ("documents",)))
+    assert n <= 1, f"documents scanned {n}x in the build"
+
+
+def _file_scans(plan: str, tables) -> list[str]:
+    return [
+        ln for ln in plan.splitlines()
+        if "FileScan" in ln and any(f"{t}.parquet" in ln for t in tables)
     ]
-    assert len(build) <= 1, f"documents scanned {len(build)}x in the build"
+
+
+@pytest.mark.parametrize(
+    "query, inputs",
+    [
+        ("simhash_near_pairs", ("documents",)),
+        ("category_totals", ("lineitem", "orders", "part", "supplier")),
+    ],
+)
+def test_shared_consumers_stop_at_the_checkpoint(spark, sf_dir, query, inputs):
+    """A consumer of a ``registry.shared`` entry reads its checkpointed
+    rows: no in-memory cache scan, and none of the entry's input files,
+    appear in the consumer's plan."""
+    import __spark_entry__ as entrymod
+
+    plan = _plan(entrymod.queries()[query](spark, sf_dir))
+    assert "InMemoryTableScan" not in plan, plan[:2000]
+    assert not _file_scans(plan, inputs), plan[:2000]
+    assert "Scan ExistingRDD" in plan, plan[:2000]
 
 
 def test_q21_one_lineitem_scan(spark, sf_dir):

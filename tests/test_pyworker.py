@@ -134,3 +134,38 @@ def test_workers_import_package_from_any_cwd(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert "ROWS 4" in out.stdout, out.stderr[-3000:]
+
+
+def test_socket_dir_is_owner_only():
+    """Python workers skip the auth handshake over a Unix socket, so the
+    socket directory admits only its owner."""
+    import stat
+
+    from spendinganalysisetl_spark import session
+
+    mode = os.stat(session._socket_dir()).st_mode
+    assert stat.S_IMODE(mode) == 0o700
+
+
+def test_workers_run_under_a_long_tmpdir(tmp_path):
+    """A session whose TMPDIR and ``java.io.tmpdir`` are too long to hold
+    an AF_UNIX socket path still runs Python tasks."""
+    tmp = tmp_path / ("t" * max(1, 100 - len(str(tmp_path))))
+    tmp.mkdir()
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {ROOT!r})\n"
+        "from spendinganalysisetl_spark.session import get_spark\n"
+        "spark = get_spark(app_name='tmpdir-probe', cpus=1, extra_conf={\n"
+        f"    'spark.driver.defaultJavaOptions': '-Djava.io.tmpdir={tmp}'}})\n"
+        "df = spark.range(4, numPartitions=1).mapInPandas(lambda b: b, 'id long')\n"
+        "print('ROWS', df.count())\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=ROOT, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert len(str(tmp)) >= 100
+    assert "ROWS 4" in out.stdout, out.stderr[-3000:]

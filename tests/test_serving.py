@@ -160,3 +160,33 @@ def test_plan_cache_compiles_once_per_version(spark, sink):
         assert srv.plan_cache.plan_count == 2, "same version again → cached"
     finally:
         srv.stop()
+
+
+def test_summary_short_body_times_out(spark, sink):
+    """A body shorter than its Content-Length no longer holds a handler
+    thread: the server gives up on the read within its socket timeout,
+    and the next request is served."""
+    import socket
+    import time
+    from urllib.parse import urlsplit
+
+    srv = serve_reports(spark, sink)
+    try:
+        url = urlsplit(srv.base_url)
+        with socket.create_connection((url.hostname, url.port), timeout=15) as s:
+            s.sendall(
+                b"POST /dates/summary HTTP/1.1\r\nHost: x\r\n"
+                b"Content-Length: 100\r\n\r\n{}  "
+            )
+            t0 = time.monotonic()
+            status = s.makefile("rb").readline()
+            waited = time.monotonic() - t0
+        assert status == b"" or status.split()[1].startswith(b"4"), status
+        assert waited < 10, waited
+        hit = _post(
+            srv.base_url + "/dates/summary",
+            {"begin_date": "2024-01-01", "end_date": "2024-01-31"},
+        )
+        assert hit["fi_summary"] == "Jan summary"
+    finally:
+        srv.stop()
