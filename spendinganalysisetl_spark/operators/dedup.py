@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spendinganalysisetl_spark import partitioning as P
+from spendinganalysisetl_spark.catalog import size_of
 from spendinganalysisetl_spark.functions.text import (
     char_shingles,
     fingerprint,
@@ -221,9 +223,7 @@ def minhash_lsh_pairs(
     shingle_n: int = 5,
     jaccard_threshold: float = 0.6,
     banded: DataFrame | None = None,
-    broadcast_candidates_max: int = 2_000_000,
     shingled: DataFrame | None = None,
-    broadcast_digests_max_bytes: int = 512 << 20,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact-Jaccard verify.
 
@@ -269,24 +269,25 @@ def minhash_lsh_pairs(
        intersection and Jaccard — bit-identical output to the
        single-phase form, at ~1/500th the string-kernel work.
 
-    ``broadcast_candidates_max``: below the gate the candidate-id set
-    broadcasts into the shingle-table semi-joins (the corpus payload
-    never moves for a membership decision). The count probe — a Spark
-    job — runs ONLY when ``banded`` was supplied pre-cached (the
-    registry path: one cheap job over the session-shared cache); with
-    an inline build the operator fires no job during query construction
-    and keeps the scale-safe shuffle-join arms, which AQE upgrades from
-    runtime sizes where they fit. ``0`` disables the probe entirely.
+    Candidate gate (``partitioning.BROADCAST_CANDIDATES_MAX`` rows): at
+    or below it the candidate-id set broadcasts into the shingle-table
+    semi-joins (the corpus payload never moves for a membership
+    decision). The count probe — a Spark job — runs ONLY when
+    ``banded`` was supplied pre-cached (the registry path: one cheap
+    job over the session-shared cache); with an inline build the
+    operator fires no job during query construction and keeps the
+    scale-safe shuffle-join arms, which AQE upgrades from runtime sizes
+    where they fit.
 
-    ``broadcast_digests_max_bytes``: the screen's digest-broadcast arm
-    gate (see the phase-1 note in the code) — compared against the
-    shared digest table's in-memory size, a driver-side statistic of
-    the already-materialized cache, so choosing the arm fires no job.
-    512 MB default: well under the 8 GB broadcast relation cap, the
-    "few hundred MB is usually fine" band of guide §3.1, and at that
-    size the avoided exchange is pairs/docs × 512 MB ≫ the broadcast's
-    executor-count × 512 MB for any candidate set dense enough to be
-    worth screening.
+    Digest gate (``partitioning.BROADCAST_DIGESTS_MAX_BYTES``): the
+    screen's digest-broadcast arm (see the phase-1 note in the code),
+    compared against ``size_of(shingled)`` — for the registry's
+    checkpointed shingle table, the bytes its blocks hold, read on the
+    driver without a job. 512 MB: well under the 8 GB broadcast
+    relation cap, the "few hundred MB is usually fine" band of guide
+    §3.1, and at that size the avoided exchange is pairs/docs × 512 MB
+    ≫ the broadcast's executor-count × 512 MB for any candidate set
+    dense enough to be worth screening.
     """
     if shingled is None and banded is None:
         # One corpus scan serves both branches; cache locally since the
@@ -317,8 +318,8 @@ def minhash_lsh_pairs(
     )
     small_cand = (
         probe_ok
-        and 0 < broadcast_candidates_max
-        and cand.count() <= broadcast_candidates_max
+        and 0 < P.BROADCAST_CANDIDATES_MAX
+        and cand.count() <= P.BROADCAST_CANDIDATES_MAX
     )
     # Verify needs shingle SETS — but only for docs that appear in a
     # candidate pair: semi-join down to candidates before the arrays
@@ -344,10 +345,10 @@ def minhash_lsh_pairs(
     # exchange of incompressible hashes if the pair⋈digest join shuffles
     # its intermediate, and the planner's SMJ additionally SORTS that
     # array-carrying side: measured 32–64 s). Two arms, chosen without
-    # running a job (the cached digest table's in-memory size is a
-    # driver-side stat):
+    # running a job (``size_of`` reads the digest table's block bytes
+    # on the driver):
     # - digest-broadcast (guide §8 "move big rows once" taken to its
-    #   limit — move them never): below ``broadcast_digests_max_bytes``
+    #   limit — move them never): at or below the digest gate
     #   both digest sides broadcast and the screen streams the thin
     #   pair table through two BroadcastHashJoins — zero array bytes
     #   through any exchange (sf1: 5.3 s stable vs 9.4 s SHJ).
@@ -366,19 +367,11 @@ def minhash_lsh_pairs(
         F.col("n_sh").alias("n_b"),
         F.col("nh_sh").alias("nh_b"),
     )
-    bcast_digests = False
-    if small_cand and shingled is not None:
-        try:
-            est = int(
-                shingled._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        except Exception:
-            est = 0
-        bcast_digests = 0 < est <= broadcast_digests_max_bytes
-    if bcast_digests:
+    if (
+        small_cand
+        and shingled is not None
+        and 0 < size_of(shingled) <= P.BROADCAST_DIGESTS_MAX_BYTES
+    ):
         hs_a, hs_b = F.broadcast(hs_a), F.broadcast(hs_b)
     else:
         hs_a = hs_a.hint("SHUFFLE_HASH")
@@ -1211,7 +1204,6 @@ def line_boilerplate_stats(
     bands: int = 2,
     gram: int = 3,
     min_docs: int = 3,
-    broadcast_flags: bool = True,
 ) -> DataFrame:
     """Line-level near-dedup in the RefinedWeb/CCNet line-dedup shape
     (public methods: Penedo et al. 2023 §3.3 exact-substring/line
@@ -1238,18 +1230,15 @@ def line_boilerplate_stats(
     chased with a pair-verify — boilerplate flagging is a recall
     filter, not a join).
 
-    ``broadcast_flags``: the final flag join attaches
-    the flagged-line vocabulary back to the PER-OCCURRENCE line table —
-    the largest table in the plan — and without a hint the planner
-    sort-merge-joins it, exchanging every occurrence on the line key
-    just to set one bit (measured: that exchange+sort was the plan's
-    only SMJ). The flag side is the boilerplate vocabulary — bounded by
-    distinct flagged lines, orders of magnitude below the occurrence
-    stream on any boilerplate-heavy corpus (the only corpora where the
-    flag set is large at all) — so it broadcasts; pass ``False`` for a
-    pathological corpus whose flagged vocabulary itself exceeds
-    broadcast limits, which restores the key join unchanged (results
-    are identical either way — the join is a left semi-flag).
+    The final flag join attaches the flagged-line vocabulary back to
+    the PER-OCCURRENCE line table — the largest table in the plan — and
+    without a hint the planner sort-merge-joins it, exchanging every
+    occurrence on the line key just to set one bit (measured: that
+    exchange+sort was the plan's only SMJ). The flag side is the
+    boilerplate vocabulary — bounded by distinct flagged lines, orders
+    of magnitude below the occurrence stream on any boilerplate-heavy
+    corpus (the only corpora where the flag set is large at all) — so
+    it broadcasts.
 
     Scale shape: NO pair join anywhere — O(distinct lines x bands)
     bucket rows, so a bucket shared by a million boilerplate copies
@@ -1259,8 +1248,7 @@ def line_boilerplate_stats(
     >> distinct count for boilerplate-heavy crawls), the signature
     groupBy, the bucket-support aggregation (band key), and the final
     doc_id rollup. The boilerplate-line set is the flagged vocabulary
-    — typically tiny; it broadcasts by default (``broadcast_flags``
-    below documents the key-join off-ramp).
+    — typically tiny; it broadcasts (above).
 
     Differential: tests/test_dedup_similarity.py replicates the full
     pipeline in pure Python (hashlib.md5) on a planted corpus;
@@ -1312,9 +1300,8 @@ def line_boilerplate_stats(
         .distinct()
         .withColumn("is_boiler", F.lit(1))
     )
-    flags = F.broadcast(boiler) if broadcast_flags else boiler
     return (
-        dl.join(flags, "line", "left")
+        dl.join(F.broadcast(boiler), "line", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_lines"),

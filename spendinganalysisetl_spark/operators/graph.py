@@ -24,9 +24,10 @@ the bounded iterations stay one lazy DAG (see the in-function note; for
 data-dependent iteration counts, checkpoint periodically instead). Rank
 state is 16 bytes per node; the edge table never re-shuffles after the
 first round under a stable partitioning. When the exact node count says
-the rank state is broadcastable (r11 gate, default ≤2M nodes), the edge
-cache is hash-partitioned by dst and both node-state joins broadcast,
-making every iteration shuffle-free; above the gate (r12) the edge
+the rank state is broadcastable (at most
+``partitioning.BROADCAST_STATE_MAX_NODES``), the edge cache is
+hash-partitioned by dst and both node-state joins broadcast, making
+every iteration shuffle-free; above the gate the edge
 cache is hash-partitioned by src at the shuffle-partition count so the
 edges⋈shares join is co-partitioned on both sides, and each iteration's
 only live exchange is the narrow (dst, share) aggregation (join
@@ -38,6 +39,9 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from spendinganalysisetl_spark import partitioning as P
+from spendinganalysisetl_spark.catalog import size_of
 
 MASS = 10**12  # total integer rank mass
 
@@ -98,42 +102,12 @@ def _edges_degrees(
     return und, nd, n
 
 
-def _dst_partitions(und: DataFrame) -> int:
-    """Partition count for the dst-partitioned edge cache of the
-    broadcast-state arm: the cluster's parallelism, grown past it only
-    when the edge cache's measured/estimated bytes ask for >128 MB
-    partitions (guide §2.2 — fewer, larger partitions; never fewer than
-    the core count, so the per-iteration probe stays fully parallel)."""
-    sc = und.sparkSession.sparkContext
-    try:
-        est = int(und._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = 0
-    if est <= 0:
-        return sc.defaultParallelism
-    return max(sc.defaultParallelism, -(-est // (128 << 20)))
-
-
-def _src_partitions(und: DataFrame) -> int:
-    """Partition count for the src-partitioned edge cache of the
-    ABOVE-gate arm (r12). Base = the session's shuffle-partition count,
-    NOT defaultParallelism: the per-iteration rank state flows out of
-    shuffle-planned aggregations/joins partitioned
-    ``hashpartitioning(node, spark.sql.shuffle.partitions)``, and the
-    edges⋈shares join is exchange-free only when the cached edge side
-    declares the SAME partition count. Grown past it for >128 MB
-    partitions exactly like :func:`_dst_partitions` — at that size the
-    shares side pays its (narrow) exchange back, which is the right
-    trade (guide §2.2)."""
-    spark = und.sparkSession
-    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        est = int(und._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = 0
-    if est <= 0:
-        return base
-    return max(base, -(-est // (128 << 20)))
+def _edge_partitions(und: DataFrame, floor: int) -> int:
+    """Partition count for a re-partitioned edge cache: ``floor``, grown
+    past it only when the edge cache's bytes ask for partitions over
+    ``PARTITION_BYTES`` (guide §2.2 — fewer, larger partitions, never
+    fewer than the floor)."""
+    return max(floor, -(-size_of(und) // P.PARTITION_BYTES))
 
 
 def pagerank(
@@ -141,7 +115,6 @@ def pagerank(
     iterations: int = 5,
     damping_pct: int = 85,
     check_dangling: bool = True,
-    broadcast_state_max_nodes: int = 2_000_000,
 ) -> DataFrame:
     """Fixed-iteration integer PageRank.
 
@@ -183,10 +156,13 @@ def pagerank(
     # keeps billion-node state un-collected but still deletes the
     # per-iteration edge exchange and both sorts (see the else-branch
     # note).
-    small_state = 0 < broadcast_state_max_nodes and n <= broadcast_state_max_nodes
+    small_state = n <= P.BROADCAST_STATE_MAX_NODES  # n >= 1 here
     caches = [und, nd]
     if small_state:
-        und_join = und.repartition(_dst_partitions(und), "dst").persist(
+        # Floor: the cluster's parallelism, so the per-iteration probe
+        # stays fully parallel.
+        floor = und.sparkSession.sparkContext.defaultParallelism
+        und_join = und.repartition(_edge_partitions(und, floor), "dst").persist(
             StorageLevel.MEMORY_AND_DISK
         )
     else:
@@ -208,7 +184,15 @@ def pagerank(
         # — the r10 "hints outrank better choices" lesson again.
         # Same-session A/B, 5 iterations, warm caches:
         # planner-unpartitioned 10.2 s / co-partitioned 5.1 s.
-        und_join = und.repartition(_src_partitions(und), "src").persist(
+        # Floor: the session's shuffle-partition count, NOT
+        # defaultParallelism — the rank state flows out of shuffle
+        # operators partitioned hashpartitioning(node,
+        # spark.sql.shuffle.partitions), and the edges⋈shares join is
+        # exchange-free only when the cached edge side declares the
+        # SAME count. Past 128 MB partitions the shares side pays its
+        # (narrow) exchange back, the right trade (guide §2.2).
+        floor = int(und.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        und_join = und.repartition(_edge_partitions(und, floor), "src").persist(
             StorageLevel.MEMORY_AND_DISK
         )
         # Materialize NOW (one pass over the edges — the first

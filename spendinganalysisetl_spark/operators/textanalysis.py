@@ -545,8 +545,6 @@ def stupid_backoff_ce(
     train_mod: int = 20,
     alpha_num: int = 2,
     alpha_den: int = 5,
-    weight_join: str = "broadcast",
-    preagg: bool = False,
 ) -> DataFrame:
     """Per-document bigram cross-entropy under a Stupid Backoff LM
     (public method: Brants et al. 2007, "Large Language Models in
@@ -581,22 +579,17 @@ def stupid_backoff_ce(
     doc_id. The corpus pair stream itself never exchanges on a pair
     key (the first-draft shape aggregated (doc, w1, w2) before joining
     and paid a full corpus-pair shuffle for a ~1.1× row cut — r10 sf1
-    A/B: 5.1-5.9 s → ~1.4 s rewritten; ``preagg=True`` re-exposes that
-    shape under the final join order for A/B honesty). The weight side
-    is built from the TRAIN slice only — and in the CCNet arrangement
-    the train corpus is a FIXED compact trusted set (Wikipedia-sized),
-    so its pair vocabulary is O(LM), bounded regardless of how many
-    petabytes get scored — hence ``weight_join="broadcast"`` (the
-    default) pins the three weight joins to explicit broadcasts
-    instead of leaving the strategy to AQE stats (r10 VERDICT ask #1:
-    the no-pair-key-exchange property held only by AQE's grace;
-    tests/test_plan_audit.py pins it now). ``weight_join="auto"``
-    restores planner choice for the out-of-arrangement case where the
-    LM itself is web-scale and the weight side must shuffled-hash.
-    Unigram counts re-aggregate the shared doc-term
-    index when given; corpus totals are scalar broadcasts (never
-    unpartitioned windows); the backoff CASE rides the join
-    projection."""
+    A/B: 5.1-5.9 s → ~1.4 s rewritten). The weight side is built from
+    the TRAIN slice only — and in the CCNet arrangement the train
+    corpus is a FIXED compact trusted set (Wikipedia-sized), so its
+    pair vocabulary is O(LM), bounded regardless of how many petabytes
+    get scored — hence the three weight joins are explicit broadcasts
+    instead of leaving the strategy to AQE stats (the
+    no-pair-key-exchange property otherwise held only by AQE's grace;
+    tests/test_plan_audit.py pins it). Unigram counts re-aggregate the
+    shared doc-term index when given; corpus totals are scalar
+    broadcasts (never unpartitioned windows); the backoff CASE rides the
+    join projection."""
     from pyspark.sql import Window  # noqa: F401  (parity with siblings)
 
     toks = _spread(documents.select("doc_id", "text")).select(
@@ -643,17 +636,11 @@ def stupid_backoff_ce(
     ca = uni.select(F.col("term").alias("w1"), F.col("c_u").alias("c_a"))
     cbu = uni.select(F.col("term").alias("w2"), F.col("c_u").alias("c_b"))
     alpha = F.lit(alpha_num).cast("double") / F.lit(alpha_den)
-    hint = F.broadcast if weight_join == "broadcast" else (lambda d: d)
-    if preagg:
-        probe = pairs.groupBy("doc_id", "w1", "w2").agg(
-            F.count(F.lit(1)).cast("long").alias("m")
-        )
-    else:
-        probe = pairs.withColumn("m", F.lit(1).cast("long"))
     joined = (
-        probe.join(hint(cb), ["w1", "w2"], "left")
-        .join(hint(ca), "w1", "left")
-        .join(hint(cbu), "w2", "left")
+        pairs.withColumn("m", F.lit(1).cast("long"))
+        .join(F.broadcast(cb), ["w1", "w2"], "left")
+        .join(F.broadcast(ca), "w1", "left")
+        .join(F.broadcast(cbu), "w2", "left")
         .crossJoin(F.broadcast(tot))
     )
     s = (

@@ -1,11 +1,40 @@
-"""Partitioning helpers — the explicit knobs this engine turns where
-Catalyst can't know better (SURVEY.md §4: everything else is left to the
-optimizer on purpose).
+"""Partitioning and join-strategy thresholds, and the fan-out helpers.
+
+Every size gate reads ``catalog.size_of`` (bytes, no Spark job, 0 when
+unknown → never broadcast) and compares it with one of these constants;
+a test that forces a gate's other arm monkeypatches the constant here.
+
+- ``SPREAD_BYTES_PER_TASK`` (8 MB): input bytes per task for the
+  Arrow/pandas partials stages ``spread_scaled`` sizes.
+- ``PARTITION_BYTES`` (128 MB): bytes per partition past which a
+  repartitioned cache grows beyond its floor (``graph.pagerank``'s
+  edge cache).
+- ``BROADCAST_DIGESTS_MAX_BYTES`` (512 MB): the shared shingle-digest
+  table broadcasts into ``dedup.minhash_lsh_pairs``' hash screen at or
+  below this size.
+- ``BROADCAST_CANDIDATES_MAX`` (2M rows): the MinHash candidate-id set
+  broadcasts into the verify semi-joins at or below this count (a row
+  count: the one gate that still runs a ``count()`` job).
+- ``BROADCAST_STATE_MAX_NODES`` (2M): PageRank broadcasts its rank
+  state at or below this node count.
+
+The fact⋈fact join threshold is not repeated here: it is the session's
+``spark.sql.autoBroadcastJoinThreshold``, the one Catalyst's own
+auto-broadcast uses (``registry._fact_join_hint``). Everything else is
+left to the optimizer on purpose (SURVEY.md §4).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from spendinganalysisetl_spark.catalog import size_of
+
+SPREAD_BYTES_PER_TASK = 8 << 20
+PARTITION_BYTES = 128 << 20
+BROADCAST_DIGESTS_MAX_BYTES = 512 << 20
+BROADCAST_CANDIDATES_MAX = 2_000_000
+BROADCAST_STATE_MAX_NODES = 2_000_000
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -26,11 +55,11 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def spread_scaled(df: DataFrame, bytes_per_task: int = 8 << 20) -> DataFrame:
-    """Size-adaptive ``spread``: fan out to ``ceil(size / bytes_per_task)``
-    partitions, capped at the cluster's default parallelism (r11,
-    optimization guide §2.5 — derive partitioning from input size, not a
-    constant tuned for one scale).
+def spread_scaled(df: DataFrame) -> DataFrame:
+    """Size-adaptive ``spread``: fan out to ``ceil(size_of(df) /
+    SPREAD_BYTES_PER_TASK)`` partitions, capped at the cluster's default
+    parallelism (optimization guide §2.5 — derive partitioning from
+    input size, not a constant tuned for one scale).
 
     ``spread`` always fans to FULL parallelism, which is right when
     per-row compute dwarfs task overhead (shingling, hashing). For
@@ -39,14 +68,11 @@ def spread_scaled(df: DataFrame, bytes_per_task: int = 8 << 20) -> DataFrame:
     small input fanned to 32 partitions pays 32 Arrow task setups per
     pass for microseconds of GEMM each. On the 800 KB sf0.1 input the
     k-means fit (8 cells, 3 passes, ``local[4]``) takes 0.87 s warm at
-    1 partition vs 0.97 s at 4 (medians of 5). The 32-partition figures
-    (10.7 s cold / 1.2 s warm vs 0.84 s at 1) predate the worker daemon
-    (``pyworker``), which cut each Python task's setup from ~300 ms to
-    ~100 ms on a 4-vCPU VM. Size comes from the optimizer's estimate for
-    the (column-pruned) plan — for the parquet scans these stages read,
-    that is the pruned file footprint; at 8 MB/task the fan-out reaches
-    full parallelism once the input is executor-memory-sized and the
-    task overhead amortizes. Estimate unavailable/zero → plain spread.
+    1 partition vs 0.97 s at 4 (medians of 5). For the (column-pruned)
+    parquet scans these stages read, the size is the pruned file
+    footprint; at 8 MB/task the fan-out reaches full parallelism once
+    the input is executor-memory-sized and the task overhead amortizes.
+    Size unknown (0) → plain spread.
 
     The derived count is reconciled with the input's EXISTING partition
     count so the plan never pays an exchange it doesn't need: growing
@@ -69,34 +95,29 @@ def spread_scaled(df: DataFrame, bytes_per_task: int = 8 << 20) -> DataFrame:
     (exact-integer or exactly-representable partials; per-row
     projections) — see each call site's note.
 
-    Call-site contract (r11 ADVICE #2): ``df.rdd.getNumPartitions()``
-    below forces a physical-planning pass (plus the Python RDD
-    conversion), cheap once per query but a hidden cost in a loop —
-    invoke this helper ONCE per pipeline, outside iteration loops (all
-    current call sites comply). The pre-execution count is a heuristic
-    that can differ from the runtime count under AQE; both reconcile
-    arms are correct either way, only minimality is affected."""
-    sc = df.sparkSession.sparkContext
-    cap = sc.defaultParallelism
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = 0
-    # est unavailable/zero → plain-spread sizing (full parallelism);
-    # the reconcile below still applies so a defaultParallelism=1 host
-    # (r11 ADVICE #3) coalesces instead of planning the forbidden
+    Call-site contract: ``df.rdd.getNumPartitions()`` below forces a
+    physical-planning pass (plus the Python RDD conversion), cheap once
+    per query but a hidden cost in a loop — invoke this helper ONCE per
+    pipeline, outside iteration loops (all current call sites comply).
+    The pre-execution count is a heuristic that can differ from the
+    runtime count under AQE; both reconcile arms are correct either
+    way, only minimality is affected."""
+    cap = df.sparkSession.sparkContext.defaultParallelism
+    est = size_of(df)
+    # Size unknown → plain-spread sizing (full parallelism); the
+    # reconcile below still applies so a defaultParallelism=1 host
+    # coalesces instead of planning the forbidden
     # `Exchange SinglePartition REPARTITION_BY_NUM` node.
-    n = cap if est <= 0 else max(1, min(cap, -(-est // bytes_per_task)))
+    n = cap if est <= 0 else max(1, min(cap, -(-est // SPREAD_BYTES_PER_TASK)))
     try:
         cur = df.rdd.getNumPartitions()
     except Exception:
         # Partition count unknowable: keep the exchange form for real
         # fan-outs, but shrink-to-1 is always safe as a narrow coalesce
-        # (r11 ADVICE #1 — repartition(1) here would reintroduce the
-        # single-partition Exchange the presentation-boundary audit
-        # forbids, silently, only on hosts where df.rdd fails).
+        # (repartition(1) here would reintroduce the single-partition
+        # Exchange the presentation-boundary audit forbids, silently,
+        # only on hosts where df.rdd fails).
         return df.coalesce(1) if n == 1 else df.repartition(n)
     if n > cur:
         return df.repartition(n)
     return df.coalesce(n)
-

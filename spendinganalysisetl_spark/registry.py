@@ -20,7 +20,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from spendinganalysisetl_spark.catalog import load_table, local_table, session_memo
+from spendinganalysisetl_spark.catalog import (
+    load_table,
+    local_table,
+    session_memo,
+    size_of,
+)
 from spendinganalysisetl_spark.operators import report
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -85,6 +90,8 @@ def shared(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
     - Under AQE the checkpoint reports no output partitioning, so a
       consumer grouping by the build's partition key shuffles again
       (``base_sales`` by ``order_key``).
+    - A checkpoint's plan statistics are the estimate made before the
+      build, not its bytes: size reads go through ``catalog.size_of``.
     """
     return session_memo(
         _SHARED,
@@ -127,12 +134,11 @@ def _stream_session(spark: SparkSession, shuffle_partitions: int) -> SparkSessio
     return session_memo(_SCOPED, spark, (shuffle_partitions, tz), build)
 
 
-def _fact_join_hint(
-    df: DataFrame, sf_dir: str, table: str, threshold: int = 10 << 20
-) -> DataFrame:
+def _fact_join_hint(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     """Mini cost-based strategy pick for the one fact⋈fact join in
-    Q7/Q9, keyed on ``table``'s on-disk footprint: BROADCAST below the
-    threshold, SHUFFLE_HASH above. Why both arms are explicit:
+    Q7/Q9, keyed on ``table``'s size: BROADCAST at or below the
+    session's ``spark.sql.autoBroadcastJoinThreshold``, SHUFFLE_HASH
+    above it or when the size is unknown. Why both arms are explicit:
 
     - An unconditional SHUFFLE_HASH hint OUTRANKS Spark's size-based
       broadcast selection, trading away the free broadcast at small
@@ -150,33 +156,24 @@ def _fact_join_hint(
       1.50→1.22 s, q7 0.80→0.69 s on the pre-cut shape); the build
       side stays bounded per partition by the partition sizing.
 
-    The footprint check reads file metadata only (compressed bytes, a
-    conservative under-estimate of in-memory size, so the crossover
-    errs toward the shuffle arm only after broadcast is truly gone).
-    Known approximation (r10 ADVICE #4): the gate reads the FULL
-    table's footprint while the hinted side is the pre-cut join
-    output (~2/25 of orders for q7), so near the crossover it can
-    pick SHUFFLE_HASH where broadcasting the cut side would still
-    win; the measured A/Bs confirm the chosen arms are right at both
-    sf0.1 and sf1, and the error direction only ever costs the
-    sort-skip delta, never an OOM-broadcast.
-    This is the decision a CBO makes from table stats; expressed
-    per-query because the engine deliberately runs stats-free
-    (SURVEY §4)."""
+    The size is the table scan's ``size_of``: its parquet files'
+    compressed bytes, a conservative under-estimate of in-memory size,
+    so the crossover errs toward the shuffle arm only after broadcast
+    is truly gone. Known approximation: the gate reads the FULL
+    table's size while the hinted side is the pre-cut join output
+    (~2/25 of orders for q7), so near the crossover it can pick
+    SHUFFLE_HASH where broadcasting the cut side would still win; the
+    measured A/Bs confirm the chosen arms are right at both sf0.1 and
+    sf1, and the error direction only ever costs the sort-skip delta,
+    never an OOM-broadcast. This is the decision a CBO makes from
+    table stats; expressed per-query because the engine deliberately
+    runs stats-free (SURVEY §4)."""
     from pyspark.sql import functions as F
 
-    from spendinganalysisetl_spark.catalog import table_path
-
-    p = table_path(sf_dir, table)
-    if os.path.isdir(p):
-        size = sum(
-            os.path.getsize(os.path.join(p, f))
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        )
-    else:
-        size = os.path.getsize(p) if os.path.exists(p) else 0
-    return df.hint("SHUFFLE_HASH") if size > threshold else F.broadcast(df)
+    spark = df.sparkSession
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    size = size_of(load_table(spark, sf_dir, table))
+    return F.broadcast(df) if 0 < size <= limit else df.hint("SHUFFLE_HASH")
 
 
 def _sales(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8587,7 +8584,7 @@ _CHECK_FIRST: list[str] = [
     "line_boilerplate_minhash",
     # (b) code-changed in r11 — re-earn the driver row:
     #     - stupid_backoff_bigram_ce: weight joins now explicitly
-    #       broadcast (weight_join="broadcast"; VERDICT r10 ask #1,
+    #       broadcast (VERDICT r10 ask #1,
     #       three-shape sf1 A/B in BENCH_AB_r11.json);
     #     - the four streaming drains: _stream_session now copies the
     #       caller's runtime spark.sql.session.timeZone onto the child

@@ -60,6 +60,12 @@ def _socket_dir() -> str:
     return path
 
 
+def _default_heap() -> str:
+    """``min(24g, half of physical memory)``, in megabytes."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "spendinganalysisetl_spark",
     cpus: int | None = None,
@@ -85,13 +91,18 @@ def get_spark(
         .config("spark.python.daemon.module", "spendinganalysisetl_spark.pyworker")
         .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.python.unix.domain.socket.dir", _socket_dir())
-        # Heap sized for the machine class (128 GiB box): at 8g a long
-        # 100+-query session spends a measurable share of wall-clock in
-        # GC — the full sf0.1 bench dropped 55.9s → 48.3s (stream drain
-        # alone 3.3s → 1.3s) from this one change. Local mode puts all
-        # executor threads in the driver JVM, so this is executor sizing
-        # too; a real cluster sets spark.executor.memory instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # Heap: 24g on a 128 GiB box, where at 8g a long 100+-query
+        # session spends a measurable share of wall-clock in GC (the
+        # full sf0.1 bench dropped 55.9s → 48.3s from this one change),
+        # but never past half of physical memory: a heap allowed to grow
+        # past the host's memory gets the JVM killed by the kernel in a
+        # plan-heavy burst. Local mode puts all executor threads in the
+        # driver JVM, so this is executor sizing too; a real cluster sets
+        # spark.executor.memory instead.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_heap()),
+        )
         # Wide-expression plans (pivot, minhash signatures) generate a lot
         # of whole-stage-codegen classes; the JVM default 240m code cache
         # fills after a few dozen distinct plans and JIT flushing then
@@ -126,27 +137,6 @@ def get_spark(
         .config(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
             str(128 * 1024),
-        )
-        # Scan-split sizing, parameterized (r12, VERDICT r11 ask #4;
-        # guide §6.1). Measured on the multi-file sf1 layout
-        # (BENCH_AB_r12_maxpartitionbytes.jsonl): at local scales the
-        # effective split is governed by the PARALLELISM FLOOR
-        # (maxSplitBytes = min(maxPartitionBytes, max(openCost,
-        # totalBytes/defaultParallelism))) — lineitem scans plan 31
-        # splits at EVERY setting from 4m to 512m, totals within noise
-        # (3.3–3.8 s) — so the default cannot hurt here. With the floor
-        # forced off (minPartitionNum=1) the real trade appears:
-        # splits larger than per-core work degrade scan-bound queries
-        # 2–2.7× (q1 0.49 s at 31 splits → 1.25 s at 2), while per-task
-        # overhead stays negligible down to 3.4 MB splits. Conclusion:
-        # locally the binding constraint is parallelism, not task
-        # overhead; raising the value toward the guide's 512m–1g is a
-        # CLUSTER move (fewer map tasks feeding shuffles, §2.2, and
-        # fewer listing/scheduling events at 100 TB file counts), so it
-        # ships as an env knob with the Spark default left in place.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
         )
         # The driver-generated events.parquet stores TIMESTAMP(NANOS),
         # which Spark's parquet converter rejects natively; read nanos as

@@ -263,3 +263,38 @@ def test_corpus_queries_build_from_session_state(spark, sf_dir):
         with spark_jobs(spark) as jobs:
             registry.QUERIES[query](spark, sf_dir)
             assert jobs() == 0, query
+
+
+def test_size_of_reads_bytes_without_a_job(spark, sf_dir):
+    """catalog.size_of for the three kinds of frame the size gates read,
+    none of which runs a Spark job: a parquet scan is its file's bytes;
+    a checkpointed ``shared()`` entry is the bytes its blocks hold, not
+    the checkpoint's plan statistics (the estimate made before the
+    build); a materialized persisted frame is its cached plan
+    statistics."""
+    import os
+
+    from spendinganalysisetl_spark.catalog import size_of, table_path
+    from spendinganalysisetl_spark.registry import _minhash_shingled
+
+    scan = load_table(spark, sf_dir, "orders")
+    entry = _minhash_shingled(spark, sf_dir)
+    persisted = spark.range(1000).selectExpr("id * 3 AS x").persist()
+    try:
+        persisted.count()
+        rdd_id = entry._jdf.queryExecution().logical().rdd().id()
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        blocks = sum(i.memSize() + i.diskSize() for i in infos if i.id() == rdd_id)
+        stats = persisted._jdf.queryExecution().optimizedPlan().stats()
+        with spark_jobs(spark) as jobs:
+            got = [size_of(scan), size_of(entry), size_of(persisted)]
+            assert jobs() == 0
+        want = [
+            os.path.getsize(table_path(sf_dir, "orders")),
+            blocks,
+            int(stats.sizeInBytes()),
+        ]
+        assert got == want
+        assert blocks > 0
+    finally:
+        persisted.unpersist()

@@ -132,20 +132,39 @@ def test_pagerank_broadcast_state_iterations_are_shuffle_free(spark):
     assert "hashpartitioning(node" not in plan, plan[:2000]
 
 
-def test_pagerank_gate_off_arm_bit_identical(spark):
-    """Above the gate (forced here with broadcast_state_max_nodes=0)
-    the planner-shaped arm must produce BIT-IDENTICAL ranks — integer
-    sums are order-independent, so the broadcast-state rewrite can
-    never change a value, only the plan."""
+def test_pagerank_gate_off_arm_bit_identical(spark, monkeypatch):
+    """Above the gate (forced here with the node bound at 0) the
+    planner-shaped arm must produce BIT-IDENTICAL ranks — integer sums
+    are order-independent, so the broadcast-state rewrite can never
+    change a value, only the plan."""
+    from spendinganalysisetl_spark import partitioning
+
     df = _edges_df(spark)
     a = sorted(map(tuple, pagerank(df, iterations=3).collect()))
-    b = sorted(
-        map(
-            tuple,
-            pagerank(df, iterations=3, broadcast_state_max_nodes=0).collect(),
-        )
-    )
+    monkeypatch.setattr(partitioning, "BROADCAST_STATE_MAX_NODES", 0)
+    b = sorted(map(tuple, pagerank(df, iterations=3).collect()))
     assert a == b
+
+
+def test_pagerank_edge_partitions_grow_past_floor(spark, monkeypatch):
+    """The edge-cache partition rule's growth arm: with the bytes per
+    partition forced to 1, the cache of the broadcast-state arm
+    partitions past its floor (the default parallelism), and the ranks
+    stay integer-identical."""
+    from spendinganalysisetl_spark import partitioning
+    from spendinganalysisetl_spark.operators import graph as G
+
+    df = _edges_df(spark)
+    a = sorted(map(tuple, pagerank(df, iterations=3).collect()))
+    monkeypatch.setattr(partitioning, "PARTITION_BYTES", 1)
+    b = sorted(map(tuple, pagerank(df, iterations=3).collect()))
+    und_join = G._LAST_CACHES["pagerank"][1][-1]
+    try:
+        floor = spark.sparkContext.defaultParallelism
+        assert und_join.rdd.getNumPartitions() > floor
+        assert a == b
+    finally:
+        und_join.unpersist()
 
 
 def test_cache_swap_releases_only_on_graph_change(spark):

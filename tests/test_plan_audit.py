@@ -477,7 +477,9 @@ def test_presentation_free_cores_have_no_single_partition_sink(spark, sf_dir):
         )
 
 
-def test_spread_scaled_reconciles_with_input_partitioning(spark, sf_dir):
+def test_spread_scaled_reconciles_with_input_partitioning(
+    spark, sf_dir, monkeypatch
+):
     """spread_scaled (guide §2.5) derives its fan-out from the
     optimizer's size estimate, then reconciles with the input's actual
     partition count: shrink-or-stay → narrow Coalesce (the derived-1
@@ -486,6 +488,7 @@ def test_spread_scaled_reconciles_with_input_partitioning(spark, sf_dir):
     hard-coded single-partition sink — while Coalesce(1) still declares
     SinglePartition so downstream aggregates skip their exchanges);
     grow → round-robin repartition."""
+    from spendinganalysisetl_spark import partitioning
     from spendinganalysisetl_spark.partitioning import spread_scaled
 
     base = load_table(spark, sf_dir, "embeddings").select("embedding")
@@ -512,7 +515,8 @@ def test_spread_scaled_reconciles_with_input_partitioning(spark, sf_dir):
     assert shrunk.rdd.getNumPartitions() == 1
 
     # derived n above the current count (1 byte/task → cap) → fan out.
-    grown = spread_scaled(base, bytes_per_task=1)
+    monkeypatch.setattr(partitioning, "SPREAD_BYTES_PER_TASK", 1)
+    grown = spread_scaled(base)
     assert (
         grown.rdd.getNumPartitions()
         == spark.sparkContext.defaultParallelism
@@ -658,25 +662,18 @@ def test_q7_q9_fact_join_broadcasts_below_threshold(spark, sf_dir):
 def test_q7_q9_fact_join_shuffle_hash_above_threshold(
     spark, sf_dir, monkeypatch
 ):
-    """r10 VERDICT ask #6: the ABOVE-threshold arm of _fact_join_hint —
-    the one that matters at scale — was exercised only by the recorded
-    sf1 A/Bs, never by a test. Force the crossover to 0 bytes through
-    the real query bodies (they resolve _fact_join_hint late from the
-    registry module) and assert the fact⋈fact join lands ShuffledHashJoin
-    (sort-free on both sides), never the SMJ default; the dim joins stay
-    broadcast either way."""
+    """The ABOVE-threshold arm of _fact_join_hint — the one that
+    matters at scale. Report every table's size above the session's
+    auto-broadcast threshold to the hint (lowering the threshold itself
+    would also turn the un-hinted joins into sort-merge joins), then
+    assert the fact⋈fact join lands ShuffledHashJoin (sort-free on both
+    sides), never the SMJ default; the dim joins stay broadcast either
+    way."""
     import __spark_entry__ as entrymod  # noqa: F401
 
     from spendinganalysisetl_spark import registry as reg
 
-    orig = reg._fact_join_hint
-    monkeypatch.setattr(
-        reg,
-        "_fact_join_hint",
-        lambda df, sf_dir, table, threshold=10 << 20: orig(
-            df, sf_dir, table, threshold=0
-        ),
-    )
+    monkeypatch.setattr(reg, "size_of", lambda df: 1 << 62)
     for name in (
         "tpch_q7_volume_shipping",
         "tpch_q9_product_profit",
@@ -696,8 +693,8 @@ def test_stupid_backoff_pair_stream_exchanges_only_on_doc_id(spark, sf_dir):
     CCNet arrangement) ride explicit broadcasts, so the ONLY shuffle the
     per-occurrence pair stream pays is the final map-side-combined
     doc_id aggregation. Pre-r11 this held only while AQE's runtime stats
-    happened to pick broadcast; the operator now hints it
-    (weight_join="broadcast") and this test pins the shape: zero
+    happened to pick broadcast; the operator now hints it and this
+    test pins the shape: zero
     SortMergeJoin / ShuffledHashJoin anywhere (the remaining exchanges
     are the TRAIN-slice aggregations' own groupBys, 5% of the corpus),
     ≥3 BroadcastHashJoin, and a doc_id hash exchange present."""
@@ -716,8 +713,8 @@ def test_line_boilerplate_flag_join_broadcasts(spark, sf_dir):
     attaches the flagged-line vocabulary to the PER-OCCURRENCE line
     table — the largest table in the plan. Un-hinted, the planner
     sort-merge-joined it, exchanging and sorting every line occurrence
-    just to set one bit; the operator now broadcasts the vocabulary
-    (``broadcast_flags=True`` default), so the occurrence stream's only
+    just to set one bit; the operator now broadcasts the vocabulary,
+    so the occurrence stream's only
     exchanges are the distinct-line collapse and the final doc_id
     rollup. Pin: the left-outer flag join is a BroadcastHashJoin and no
     SortMergeJoin appears anywhere in the query's plan."""
@@ -748,7 +745,9 @@ def test_minhash_verify_semi_join_broadcasts_candidate_ids(spark, sf_dir):
     assert "LeftSemi, BuildRight" in plan, plan[:2000]
 
 
-def test_pagerank_above_gate_arm_single_live_exchange_per_iteration(spark):
+def test_pagerank_above_gate_arm_single_live_exchange_per_iteration(
+    spark, monkeypatch
+):
     """r12 (VERDICT r11 ask #6, guide §2.4): above the broadcast-state
     gate the loop used to pay two join exchanges plus the aggregation
     exchange per iteration. The src-partitioned, MATERIALIZED edge
@@ -759,6 +758,7 @@ def test_pagerank_above_gate_arm_single_live_exchange_per_iteration(spark):
     planner's (forcing SHUFFLE_HASH measured 25–28 s vs 5.1 s for the
     co-partitioned SMJ at 4M nodes), so only the exchange structure is
     pinned here."""
+    from spendinganalysisetl_spark import partitioning
     from spendinganalysisetl_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
@@ -766,9 +766,8 @@ def test_pagerank_above_gate_arm_single_live_exchange_per_iteration(spark):
         "src string, dst string",
     )
     iterations = 3
-    df = pagerank(
-        edges, iterations=iterations, broadcast_state_max_nodes=0
-    )
+    monkeypatch.setattr(partitioning, "BROADCAST_STATE_MAX_NODES", 0)
+    df = pagerank(edges, iterations=iterations)
     plan = _plan(df)
     # Distinct plan ids, because cached subtrees (nd's groupBy build)
     # reprint under every InMemoryTableScan reference with the SAME id.
@@ -791,50 +790,112 @@ def test_pagerank_above_gate_arm_single_live_exchange_per_iteration(spark):
     assert len(src_live) <= 1, f"{sorted(ids)}\n{plan[:2500]}"
 
 
-def test_minhash_two_phase_verify_plan_arms(spark, sf_dir):
-    """r12 (guide §8/§3.1): the verify's hash-screen must never
-    sort-merge — the planner's SMJ sorts a 1.4M-row array-carrying
-    side (measured 32–64 s at sf1). Below the digest-size gate both
-    digest sides BROADCAST (zero array bytes through any exchange);
-    with the gate forced off they carry SHUFFLE_HASH hints (sort-free
-    exchange arm). The exact-confirm pair joins are ShuffledHashJoins
-    in both arms."""
+def _minhash_fresh_arm(spark, sf_dir):
+    """``minhash_lsh_pairs`` over the session's shared shingle table and
+    a new checkpoint of its banded signatures: a plan no earlier call
+    built, so the operator's own caches (candidates, screen survivors,
+    candidate shingle sets) cannot hand back another arm's cached plan
+    — ``CacheManager`` matches plans with their hints stripped. Returns
+    (physical plan, rows)."""
+    from spendinganalysisetl_spark.catalog import release
     from spendinganalysisetl_spark.operators.dedup import minhash_lsh_pairs
     from spendinganalysisetl_spark.registry import (
         _minhash_banded,
         _minhash_shingled,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    banded = _minhash_banded(spark, sf_dir)
-    shingled = _minhash_shingled(spark, sf_dir)
+    banded = _minhash_banded(spark, sf_dir).localCheckpoint(eager=True)
+    try:
+        df = minhash_lsh_pairs(
+            load_table(spark, sf_dir, "documents"),
+            banded=banded,
+            shingled=_minhash_shingled(spark, sf_dir),
+        )
+        return _plan(df), [tuple(r) for r in df.collect()]
+    finally:
+        release(banded)
+
+
+def _broadcast_feeds(plan: str, alias: str) -> int:
+    """BroadcastExchange nodes whose child projects ``alias``."""
+    lines = plan.splitlines()
+    return sum(
+        "BroadcastExchange" in ln and f" AS {alias}#" in nxt
+        for ln, nxt in zip(lines, lines[1:])
+    )
+
+
+def test_minhash_two_phase_verify_plan_arms(spark, sf_dir, monkeypatch):
+    """r12 (guide §8/§3.1): the verify's hash-screen must never
+    sort-merge — the planner's SMJ sorts a 1.4M-row array-carrying
+    side (measured 32–64 s at sf1). Below the digest-size gate both
+    digest sides BROADCAST (zero array bytes through any exchange);
+    with the gate forced off they carry SHUFFLE_HASH hints (sort-free
+    exchange arm). The exact-confirm pair joins are ShuffledHashJoins
+    in both arms, and both arms produce identical rows (the screen is
+    a provable superset + exact confirm; the arm only moves bytes
+    differently)."""
+    from spendinganalysisetl_spark import partitioning
 
     # broadcast arm (default gate; the tiny test corpus is far below it)
-    plan = _plan(
-        minhash_lsh_pairs(docs, banded=banded, shingled=shingled)
-    )
+    plan, rows = _minhash_fresh_arm(spark, sf_dir)
     assert "SortMergeJoin" not in plan, plan[:2000]
     assert "ShuffledHashJoin" in plan, plan[:2000]  # exact-confirm joins
 
     # forced shuffle arm: no digest broadcast, still sort-free
-    plan_shj = _plan(
-        minhash_lsh_pairs(
-            docs,
-            banded=banded,
-            shingled=shingled,
-            broadcast_digests_max_bytes=0,
-        )
-    )
+    monkeypatch.setattr(partitioning, "BROADCAST_DIGESTS_MAX_BYTES", 0)
+    plan_shj, rows_shj = _minhash_fresh_arm(spark, sf_dir)
     assert "SortMergeJoin" not in plan_shj, plan_shj[:2000]
     assert "ShuffledHashJoin" in plan_shj, plan_shj[:2000]
+    assert rows_shj == rows
 
-    # both arms produce identical rows (the screen is a provable
-    # superset + exact confirm; the arm only moves bytes differently)
-    a = minhash_lsh_pairs(docs, banded=banded, shingled=shingled).collect()
-    b = minhash_lsh_pairs(
-        docs, banded=banded, shingled=shingled, broadcast_digests_max_bytes=0
-    ).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+def test_minhash_digest_gate_reads_checkpoint_block_bytes(
+    spark, sf_dir, monkeypatch
+):
+    """The digest gate compares the shared shingle table's BLOCK bytes,
+    not its checkpoint's plan statistics (the estimate made before the
+    build, tens of times under the blocks). With the gate one byte
+    under ``size_of`` of that table, neither digest side broadcasts,
+    and the rows equal the broadcast arm's."""
+    from spendinganalysisetl_spark import partitioning
+    from spendinganalysisetl_spark.catalog import size_of
+    from spendinganalysisetl_spark.registry import _minhash_shingled
+
+    plan, rows = _minhash_fresh_arm(spark, sf_dir)
+    assert _broadcast_feeds(plan, "shh_a") and _broadcast_feeds(plan, "shh_b")
+
+    monkeypatch.setattr(
+        partitioning,
+        "BROADCAST_DIGESTS_MAX_BYTES",
+        size_of(_minhash_shingled(spark, sf_dir)) - 1,
+    )
+    plan_off, rows_off = _minhash_fresh_arm(spark, sf_dir)
+    for alias in ("shh_a", "shh_b"):
+        assert not _broadcast_feeds(plan_off, alias), plan_off[:3000]
+    assert "SortMergeJoin" not in plan_off, plan_off[:3000]
+    assert rows_off == rows
+
+
+def test_minhash_candidate_gate_arms(spark, sf_dir, monkeypatch):
+    """Both arms of the candidate gate: at the default the candidate-id
+    set broadcasts into the verify semi-joins; with the gate at 0 rows
+    no semi-join broadcasts it, and the rows are the same."""
+    from spendinganalysisetl_spark import partitioning
+
+    def semi_broadcasts(plan: str) -> int:
+        return sum(
+            "BroadcastHashJoin" in ln and "LeftSemi" in ln
+            for ln in plan.splitlines()
+        )
+
+    plan, rows = _minhash_fresh_arm(spark, sf_dir)
+    assert semi_broadcasts(plan), plan[:3000]
+
+    monkeypatch.setattr(partitioning, "BROADCAST_CANDIDATES_MAX", 0)
+    plan_off, rows_off = _minhash_fresh_arm(spark, sf_dir)
+    assert not semi_broadcasts(plan_off), plan_off[:3000]
+    assert rows_off == rows
 
 
 def test_ivf_cell_assignment_evaluates_udf_once(spark, sf_dir):
