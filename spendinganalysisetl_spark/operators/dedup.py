@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spendinganalysisetl_spark import partitioning as P
-from spendinganalysisetl_spark.catalog import size_of
+from spendinganalysisetl_spark.catalog import release, size_of
 from spendinganalysisetl_spark.functions.text import (
     char_shingles,
     fingerprint,
@@ -626,7 +626,6 @@ def connected_components(
     nodes: DataFrame,
     max_iter: int = 25,
     init_labels: DataFrame | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation:
     ``label(v) = min(label(v), min over neighbors' labels)`` until a
@@ -653,32 +652,18 @@ def connected_components(
     The reference has no graph ops at all (SURVEY.md §2.3: no joins
     beyond key probes); this is north_star dedup-pipeline machinery.
 
-    ``num_partitions`` sizes the per-round shuffles EXPLICITLY (label
-    tables are usually far smaller than the session's corpus-sized
-    ``spark.sql.shuffle.partitions``, and AQE's parallelismFirst
-    coalescing still keeps ~defaultParallelism partitions — hundreds of
-    near-empty tasks per round on a small graph). An explicit
-    ``repartition(n, key)`` ahead of each keyed operation satisfies the
-    join/groupBy distribution requirement, so no second exchange plans
-    behind it — and unlike pinning ``spark.sql.shuffle.partitions``
-    around the call (the pre-r10 idiom), it mutates no session-global
-    state (r9 ADVICE: racy under concurrent query construction).
-    ``None`` keeps the session sizing — the right default at corpus
-    scale.
+    The per-round shuffles take the session's sizing: label tables are
+    often far smaller than ``spark.sql.shuffle.partitions``, and AQE
+    coalesces their exchanges from runtime sizes. The edge table is a
+    local checkpoint, not a cache, because Spark runs a cached plan
+    without AQE (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+    is off), so a cached exchange keeps the static partition count.
     """
-
-    def _part(df: DataFrame, *cols: str) -> DataFrame:
-        return (
-            df
-            if num_partitions is None
-            else df.repartition(num_partitions, *cols)
-        )
-
-    und = _part(
+    und = (
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))),
-        "src",
-    ).cache()  # probed every round
+        .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        .localCheckpoint()  # probed every round
+    )
     # Optional warm start: ``init_labels`` (id, label) with label ≤ id
     # and label in the same component — e.g. the bucket-min hub in
     # lsh_cluster_stars. Min-propagation is monotone from ANY such
@@ -713,18 +698,15 @@ def connected_components(
         labels, prev = _ck_with_sum(self_labels)
     for _ in range(max_iter):
         msgs = und.join(
-            _part(labels.select(F.col("id").alias("src"), "label"), "src"),
-            "src",
+            labels.select(F.col("id").alias("src"), "label"), "src"
         ).select(F.col("dst").alias("id"), "label")
         labels, cur = _ck_with_sum(
-            _part(labels.union(msgs), "id")
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
+            labels.union(msgs).groupBy("id").agg(F.min("label").alias("label"))
         )
         if cur == prev:
             break
         prev = cur
-    und.unpersist()
+    release(und)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -772,7 +754,6 @@ def lsh_cluster_stars(
     bands: int = 8,
     shingle_n: int = 5,
     banded: DataFrame | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Near-dup CLUSTERS from LSH buckets via star edges — the scale
     path for massively duplicated corpora, where pairwise output is the
@@ -799,56 +780,33 @@ def lsh_cluster_stars(
     if banded is None:
         sig = _minhash_signatures(documents, n_hashes, shingle_n)
         banded = banded_signatures(sig, n_hashes, bands)
-    return _star_clusters(banded, documents, num_partitions=num_partitions)
+    return _star_clusters(banded, documents)
 
 
-def _star_clusters(
-    banded: DataFrame,
-    documents: DataFrame,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def _star_clusters(banded: DataFrame, documents: DataFrame) -> DataFrame:
     """Shared back half of the star-clustering family: bucket → hub
     (min doc_id per (band, band_sig)) → star edges → warm-started
     connected components → presented cluster report. ``banded`` must
     carry (doc_id, band, band_sig); ``documents`` supplies the
-    vertex set (docs in no bucket collision stay singleton clusters).
-    ``num_partitions`` explicitly sizes the eager clustering shuffles
-    (see :func:`connected_components`) — these tables are band/label-
-    sized, far below the session's corpus sizing."""
-    from pyspark.sql import Window
-
-    def _part(df: DataFrame, *cols: str) -> DataFrame:
-        return (
-            df
-            if num_partitions is None
-            else df.repartition(num_partitions, *cols)
-        )
-
-    with_hub = _part(banded, "band", "band_sig").withColumn(
+    vertex set (docs in no bucket collision stay singleton clusters)."""
+    with_hub = banded.withColumn(
         "hub", F.min("doc_id").over(Window.partitionBy("band", "band_sig"))
-    ).cache()  # feeds both the edge set and the warm-start labels
-    edges = _part(
-        with_hub.filter(F.col("doc_id") != F.col("hub")).select(
-            F.col("hub").alias("id_a"), F.col("doc_id").alias("id_b")
-        ),
-        "id_a",
-        "id_b",
-    ).distinct()
+    ).localCheckpoint()  # feeds both the edge set and the warm-start labels
+    edges = (
+        with_hub.filter(F.col("doc_id") != F.col("hub"))
+        .select(F.col("hub").alias("id_a"), F.col("doc_id").alias("id_b"))
+        .distinct()
+    )
     # Warm start: every doc's initial label is the min hub over its own
     # buckets (≤ doc_id, same component) — pure star components then
     # need only the confirmation round instead of outward propagation.
     seeds = (
-        _part(with_hub, "doc_id")
-        .groupBy("doc_id")
+        with_hub.groupBy("doc_id")
         .agg(F.min("hub").alias("label"))  # hub ≤ every bucket member
         .select(F.col("doc_id").alias("id"), "label")
     )
-    cc = connected_components(
-        edges,
-        documents.select("doc_id"),
-        init_labels=seeds,
-        num_partitions=num_partitions,
-    )
+    cc = connected_components(edges, documents.select("doc_id"), init_labels=seeds)
+    release(with_hub)
     w = Window.partitionBy("cluster_id")
     return (
         cc.withColumn("cluster_size", F.count(F.lit(1)).over(w))
@@ -867,25 +825,22 @@ def lsh_cluster_stars_portable(
     bands: int = 4,
     shingle_n: int = 5,
     id_cap: int | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Star clustering over the PORTABLE md5-fold MinHash family
-    (``_portable_sig_bands`` — the same Kirsch-Mitzenmacher signatures
+    (``_portable_bands`` — the same Kirsch-Mitzenmacher signatures
     behind ``minhash_lsh_pairs_portable``): identical star-edge → CC
     pipeline to :func:`lsh_cluster_stars`, but every hash is
     reproducible outside the JVM, so a golden oracle can compute the
     expected clustering independently (registry ``lsh_cluster_fixture``
     does exactly that over a planted corpus with a pure-Python
-    replication). The xxhash64 variant stays the scale path."""
-    shingled, banded = _portable_sig_bands(
-        documents, n_hashes, bands, shingle_n, id_cap
+    replication). The xxhash64 variant stays the scale path. The bands
+    are read once, so they are not cached: a cached plan runs without
+    AQE and would keep the static shuffle partitions."""
+    base = documents if id_cap is None else documents.filter(F.col("doc_id") < id_cap)
+    ex = _normed(base).select(
+        "doc_id", F.explode(char_shingles(F.col("norm"), shingle_n)).alias("s")
     )
-    base = (
-        documents
-        if id_cap is None
-        else documents.filter(F.col("doc_id") < id_cap)
-    )
-    return _star_clusters(banded, base, num_partitions=num_partitions)
+    return _star_clusters(_portable_bands(ex, "doc_id", n_hashes, bands), base)
 
 
 def _portable_bands(

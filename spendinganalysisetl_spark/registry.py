@@ -148,8 +148,7 @@ def _fact_join_hint(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
       stats see its size — q9's raw orders scan qualifies, but q7's
       pre-cut side is a JOIN OUTPUT whose estimate exceeds the
       threshold, so the stats-free planner lands SMJ on a ~2/25-of-
-      orders side (and the sub-sf1 bench runs AQE off, so no runtime
-      rescue). The explicit broadcast arm states what a CBO would
+      orders side. The explicit broadcast arm states what a CBO would
       derive.
     - Above the threshold the side must shuffle, and SHUFFLE_HASH
       beats the SMJ default by skipping both sort passes (sf1 A/B: q9
@@ -2388,25 +2387,12 @@ def q_lsh_cluster_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quadratic in duplicate-cluster size — scale_probe.py measured the
     pair operator at 19-28× wall-clock for 10× data on a
     duplicate-dense corpus, pure output growth). The scale path for
-    mirror-heavy crawls (operators/dedup.py:lsh_cluster_stars).
-
-    Iterative CC pays per-round fixed costs on every label-table
-    shuffle; at this SF the label table is thousands of rows, so 8
-    partitions cut pure task overhead (same sizing note as the
-    streaming drain's state partitions) — a corpus-scale run keeps the
-    default parallelism (num_partitions=None). Sizing rides the
-    operator's explicit ``num_partitions`` (r10, VERDICT r9 ask #8):
-    each eager clustering shuffle is preceded by ``repartition(8,
-    key)``, which satisfies the join/groupBy distribution requirement
-    so no second exchange plans — no session-global
-    ``spark.sql.shuffle.partitions`` write, which was racy under
-    concurrent query construction."""
+    mirror-heavy crawls (operators/dedup.py:lsh_cluster_stars)."""
     from spendinganalysisetl_spark.operators.dedup import lsh_cluster_stars
 
     return lsh_cluster_stars(
         load_table(spark, sf_dir, "documents"),
         banded=_minhash_banded(spark, sf_dir),
-        num_partitions=8,
     )
 
 
@@ -5462,11 +5448,9 @@ def q_bloom_skip_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan as an IN filter instead of a join, and assembly UNIONs the two
     per-probe legs into one aggregate instead of two broadcast joins.
 
-    ACCEPTED FLOOR (r6, closing VERDICT r5 ask #4): with the plan in
-    its two-exchange/zero-probe-shuffle shape, the remaining cost is
-    11 AQE stage-jobs → 3 jobs under the bench session's static
-    planner, measuring 1.10–1.38 s at sf0.1 — dominated by the ONE
-    full orders pass the design requires (150 k rows × k=4 portable
+    ACCEPTED FLOOR: with the plan in its two-exchange/zero-probe-shuffle
+    shape, the remaining cost (11 AQE stage-jobs) is dominated by the
+    ONE full orders pass the design requires (150 k rows × k=4 portable
     md5 folds + explode + set-aggregate), i.e. real hash CPU, not
     scheduling or a plan defect. The 0.07 s DuckDB twin runs the same
     arithmetic at its fixed-cost sweet spot; at 100 TB the build is
@@ -8170,8 +8154,8 @@ ORDER BY doc_id
 
 @register("lsh_cluster_fixture", _lsh_fixture_oracle_sql())
 def q_lsh_cluster_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checkable twin of lsh_cluster_stars (VERDICT r6 ask #5):
-    the full distributed star-clustering pipeline — portable md5-fold
+    """Driver-checkable twin of lsh_cluster_stars: the full
+    distributed star-clustering pipeline — portable md5-fold
     MinHash signatures, banded bucket keys, min-hub star edges,
     warm-started iterative connected components — over a planted
     10-document corpus, compared against a golden VALUES oracle
@@ -8181,14 +8165,7 @@ def q_lsh_cluster_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     portability); this entry makes its clustering logic a driver-checked
     row. Bench note: a fixture-sized iterative CC pays the per-round
     scheduling floor, not data cost — its wall-clock vs the VALUES
-    oracle is documented-by-nature, like bpe_encode_fixture. The eager
-    clustering shuffles size to 1 partition via the operator's explicit
-    ``num_partitions`` (10 docs through ~4 CC rounds at the session's
-    32 would schedule ~hundreds of empty tasks); r10 (VERDICT r9 ask
-    #8): this replaces the pre-r10 session-global
-    ``spark.sql.shuffle.partitions`` set/restore, which was racy under
-    concurrent query construction. The returned frame's report tail
-    still plans at the session setting when the caller executes it."""
+    oracle is documented-by-nature, like bpe_encode_fixture."""
     from spendinganalysisetl_spark.operators.dedup import (
         lsh_cluster_stars_portable,
     )
@@ -8198,9 +8175,7 @@ def q_lsh_cluster_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, t) for i, t in enumerate(_LSH_FIXTURE_TEXTS)],
         "doc_id long, text string",
     )
-    return lsh_cluster_stars_portable(
-        docs, n_hashes=8, bands=4, shingle_n=5, num_partitions=1
-    )
+    return lsh_cluster_stars_portable(docs, n_hashes=8, bands=4, shingle_n=5)
 
 
 @register("pq_ann_topk")  # rows-only: codebooks come out of a seeded

@@ -72,16 +72,15 @@ def test_oracle_sql_order_matches_queries():
 
 
 def test_no_session_global_conf_writes_in_query_bodies():
-    """r10 (VERDICT r9 ask #8): no registry query body may mutate the
-    caller's session conf (set/restore of spark.sql.shuffle.partitions
-    was racy under concurrent query construction, and sticky if the
-    restore was ever missed). Per-query sizing now rides either the
-    operators' explicit ``num_partitions`` (LSH clustering) or a child
-    session from ``_stream_session`` (streaming state partitions) —
-    the only conf reads/writes in the module live in that helper,
-    configuring its OWN child session (r11: it also READS the caller's
-    runtime time zone to copy onto the child, ADVICE r10 #3 — a read
-    of the parent, a write only to the child)."""
+    """No registry query body may mutate the caller's session conf
+    (set/restore of spark.sql.shuffle.partitions was racy under
+    concurrent query construction, and sticky if the restore was ever
+    missed). Shuffle sizing is AQE's; the one per-query setting, the
+    streaming state partitions, rides a child session from
+    ``_stream_session`` — the only conf reads/writes in the module live
+    in that helper, configuring its OWN child session (it also READS
+    the caller's runtime time zone to copy onto the child — a read of
+    the parent, a write only to the child)."""
     import inspect
 
     src = inspect.getsource(registry)
